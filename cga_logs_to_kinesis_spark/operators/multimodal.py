@@ -243,16 +243,6 @@ def _const_column_stage(name: str, value):
     return batches
 
 
-def make_png_media(docs: DataFrame) -> DataFrame:
-    """Deterministic PNG fixture blobs: dimensions and pixels hashed
-    from doc_id (identical content to the raw-RGB fixtures, so the two
-    paths decode the SAME pixel arrays — the cross-codec parity hook),
-    encoded with the stdlib PNG writer."""
-    return (media_schema_df(docs)
-            .mapInPandas(_png_media_stage(),
-                         schema="doc_id long, payload binary"))
-
-
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PNG media blobs (deterministic, seeded from doc_id) → REAL codec
     decode → dimensions + exact channel means.  Rows-only in the
@@ -317,15 +307,6 @@ def _resize_media_stage(max_side: int = 16):
             })
 
     return batches
-
-
-def resize_media(media: DataFrame, max_side: int = 16) -> DataFrame:
-    """Real thumbnail stage: decode → aspect-preserving nearest-
-    neighbor resample → re-encode PNG.  Reported dimensions come from
-    RE-DECODING the thumbnail payload (the output is verified media,
-    not an assumption); digest is of the re-encoded bytes."""
-    return media.mapInPandas(_resize_media_stage(max_side),
-                             schema=RESIZED)
 
 
 def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1297,17 +1278,6 @@ def _video_frames_stage(every_nth: int = 3):
     return batches
 
 
-def video_frame_features(media: DataFrame,
-                         every_nth: int = 3) -> DataFrame:
-    """mapInPandas frame sampler: container parse, decode every Nth
-    frame with the REAL stdlib PNG codec, emit integer-exact channel
-    sums + a digest of the raw pixels.  One input row expands to many
-    output rows executor-side — the row-amplification shape that must
-    never route through the driver."""
-    return media.mapInPandas(_video_frames_stage(every_nth),
-                             schema=VIDEO_FRAMES)
-
-
 def _mpng_media_stage(n_frames: int = 12):
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -1325,16 +1295,6 @@ def _mpng_media_stage(n_frames: int = 12):
                                 "payload": payloads})
 
     return batches
-
-
-def make_mpng_media(docs: DataFrame, n_frames: int = 12) -> DataFrame:
-    """Deterministic MPNG fixture blobs: per doc, ``n_frames`` small
-    RGB frames with per-frame hashed pixels (seed = doc_id*1000 +
-    frame_index, recomputable by the oracle; constant dims within a
-    blob, like real video)."""
-    return (media_schema_df(docs)
-            .mapInPandas(_mpng_media_stage(n_frames),
-                         schema="doc_id long, payload binary"))
 
 
 def q_multimodal_video_frames(spark: SparkSession,

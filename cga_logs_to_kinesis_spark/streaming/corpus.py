@@ -115,6 +115,218 @@ def _read_store(spark: SparkSession, path: str) -> DataFrame | None:
         raise
 
 
+# ---------------------------------------------------------------------------
+# The exactly-once discipline every store family shares, declared once
+# ---------------------------------------------------------------------------
+# Each foreachBatch sink writes its batch's rows as a dynamic-overwrite
+# ``batch_id=`` partition (a replay overwrites itself instead of
+# appending a duplicate), reads cross-batch state strictly BELOW the
+# current batch id (a replay after the last write, before the
+# checkpoint commit, sees pre-batch state), and carries fault hooks
+# that crash once per listed batch id.  The helpers below are the only
+# place that discipline is written down.
+
+def _write_batch(df: DataFrame, batch_id: int, path: str) -> None:
+    """Write ``df`` as the ``batch_id=<batch_id>`` partition of the
+    store at ``path``, replacing only that partition."""
+    (df.withColumn("batch_id", F.lit(batch_id))
+     .write.mode("overwrite")
+     .options(partitionOverwriteMode="dynamic")
+     .partitionBy("batch_id").parquet(path))
+
+
+def _crash_once():
+    """Fault-injection hook for one sink (same philosophy as
+    streaming/faults.py): ``crash(batch_id, ids, where)`` raises
+    FatalDeliveryError the first time a batch id listed in ``ids``
+    reaches it, and never again for that id at any hook point of the
+    sink — so the replay runs clean."""
+    from cga_logs_to_kinesis_spark.streaming.sink import (
+        FatalDeliveryError,
+    )
+
+    already_failed: set[int] = set()
+
+    def crash(batch_id: int, ids: tuple[int, ...], where: str) -> None:
+        if batch_id in ids and batch_id not in already_failed:
+            already_failed.add(batch_id)
+            raise FatalDeliveryError(
+                f"injected crash {where}, batch {batch_id}")
+
+    return crash
+
+
+def _prior_state(spark: SparkSession, batch_id: int,
+                 *stores: tuple[str, str],
+                 optional: tuple[str, ...] = ()) -> list[DataFrame]:
+    """Pre-batch state of each ``(path, schema)`` store: the rows with
+    ``batch_id < current``, projected to the schema's columns.  If ANY
+    store has never been created, every store reads as empty by its
+    schema — the stores are written together, so a partial set is the
+    first batch crashing mid-write.  Columns named in ``optional`` are
+    skipped where an older store lacks them."""
+    empty = [spark.createDataFrame([], schema) for _, schema in stores]
+    found = [_read_store(spark, path) for path, _ in stores]
+    if any(s is None for s in found):
+        return empty
+    return [s.filter(F.col("batch_id") < F.lit(batch_id))
+            .select(*[c for c in e.columns
+                      if c in s.columns or c not in optional])
+            for s, e in zip(found, empty)]
+
+
+def _prior_version(spark: SparkSession, path: str,
+                   batch_id: int) -> DataFrame | None:
+    """The newest complete state version strictly below ``batch_id``
+    in a versioned store (one full state per partition), or None on
+    the first batch."""
+    store = _read_store(spark, path)
+    if store is None:
+        return None
+    below = store.filter(F.col("batch_id") < F.lit(batch_id))
+    prev_max = below.agg(F.max("batch_id")).first()[0]
+    if prev_max is None:
+        return None
+    return below.filter(F.col("batch_id") == prev_max)
+
+
+def _partials_sink(store_dir: str, front,
+                   fail_after_write_for: tuple[int, ...]):
+    """foreachBatch sink writing ``front(batch_df)`` — the batch's
+    mergeable partials — as its own ``batch_id`` partition.  It reads
+    nothing across batches, so no ``batch_id < current`` filter is
+    needed: a replay re-derives the same partials from the same files
+    and overwrites its own partition identically."""
+    crash = _crash_once()
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        _write_batch(front(batch_df), batch_id, store_dir)
+        crash(batch_id, fail_after_write_for, "after write")
+
+    return process
+
+
+def _batch_ids(store_dir: str) -> list[int]:
+    """The ``batch_id`` partition values present on disk."""
+    import os
+
+    return [int(name.split("=", 1)[1]) for name in os.listdir(store_dir)
+            if name.startswith("batch_id=")]
+
+
+def _drop_batches(store_dir: str, bids: list[int]) -> int:
+    """Delete the listed ``batch_id`` partitions; returns how many."""
+    import os
+    import shutil
+
+    for bid in bids:
+        shutil.rmtree(os.path.join(store_dir, f"batch_id={bid}"))
+    return len(bids)
+
+
+# Summing stores: each family declares ONE merge — its group keys and
+# a ``fold(grouped)`` returning the merge aggregates — and both its
+# reader (_fold_store) and its compactor (_compact_mergeable_store)
+# apply that declaration, so fold-after-compaction == fold-before by
+# construction.
+
+def _effective_mg_summaries(s: DataFrame) -> DataFrame:
+    """The live rows of a summing store: the newest base
+    partition (most-negative ``batch_id``; ``-(upto+2)`` encodes that
+    it folds every batch partition ``<= upto``) plus batch partitions
+    ABOVE its fold watermark.  Encoding the watermark in the
+    partition id — instead of the digest stores' plain ``-1`` base —
+    is what makes compaction crash-safe for a SUMMING consumer: a
+    crash between the base write and the old-partition cleanup leaves
+    stale dirs behind, and a reader that summed base + stale batches
+    would double-count; here stale batches sit at or below the
+    watermark and are excluded by construction, so the leftover is
+    dead weight, not corruption (re-run compaction to finish the
+    cleanup)."""
+    min_bid = s.agg(F.min("batch_id")).first()[0]
+    if min_bid is not None and min_bid < -1:
+        upto = -min_bid - 2
+        return s.filter((F.col("batch_id") == min_bid)
+                        | (F.col("batch_id") > upto))
+    return s
+
+
+def _cleanup_stale_mg_dirs(store_dir: str, base_bid: int) -> int:
+    """Remove batch directories a summing reader already ignores:
+    older base partitions and batch partitions at or below the live
+    base's fold watermark (``-base_bid - 2``).  Safe to run any time
+    ``base_bid`` is the newest (most-negative) base on disk."""
+    watermark = -base_bid - 2
+    return _drop_batches(store_dir, [
+        b for b in _batch_ids(store_dir)
+        if b != base_bid and (b < -1 or 0 <= b <= watermark)])
+
+
+def _sums(*cols: str) -> list:
+    return [F.sum(c).alias(c) for c in cols]
+
+
+def _sum_fold(*cols: str):
+    """Merge aggregates for a pure-counts partials store."""
+    return lambda g: g.agg(*_sums(*cols))
+
+
+def _fold_store(spark: SparkSession, store_dir: str, group_cols: list[str],
+                fold) -> DataFrame | None:
+    """A summing store's live rows re-folded by the family's merge, or
+    None if the store has never been created."""
+    s = _read_store(spark, store_dir)
+    if s is None:
+        return None
+    return fold(_effective_mg_summaries(s).groupBy(*group_cols))
+
+
+def _compact_mergeable_store(spark: SparkSession, store_dir: str,
+                             upto_batch_id: int,
+                             group_cols: list[str],
+                             fold,
+                             files_per_partition: int = 1) -> int:
+    """Generic compactor for a MERGEABLE-partials store: fold batch
+    partitions at or below ``upto_batch_id`` (plus any existing base)
+    into one merged base at ``batch_id = -(max_folded + 2)`` — the
+    heavy-hitters watermark discipline, because a folding consumer
+    must never see base + stale batch rows together (see
+    _effective_mg_summaries).  ``max_folded`` is the HIGHEST batch id
+    actually folded, so an ``upto_batch_id`` ahead of the stream
+    cannot write a watermark that would silently exclude batches that
+    arrive later.  ``fold(grouped)`` supplies the merge aggregates
+    (sums / mins / maxes — whatever the family's partials re-fold
+    with).  Run with the stream stopped; re-run to finish an
+    interrupted cleanup."""
+    df = _read_store(spark, store_dir)
+    if df is None:
+        return 0
+    live = _effective_mg_summaries(df)
+    fold_sel = (F.col("batch_id") < -1) | (F.col("batch_id")
+                                           <= upto_batch_id)
+    to_fold = live.filter(fold_sel)
+    stats = (to_fold.filter(F.col("batch_id") >= 0)
+             .agg(F.countDistinct("batch_id").alias("n"),
+                  F.max("batch_id").alias("mx")).first())
+    n_folded, max_folded = stats["n"], stats["mx"]
+    if n_folded == 0:
+        # Nothing new to fold — but a prior run may have crashed
+        # between its base write and its cleanup, so finish it.
+        min_bid = df.agg(F.min("batch_id")).first()[0]
+        if min_bid is not None and min_bid < -1:
+            _cleanup_stale_mg_dirs(store_dir, min_bid)
+        return 0
+    new_bid = -(max_folded + 2)
+    merged = (fold(to_fold.groupBy(*group_cols))
+              .coalesce(files_per_partition)
+              .localCheckpoint())      # self-read: old base is input
+    _write_batch(merged, new_bid, store_dir)
+    # cleanup AFTER the new base is durable; stale dirs are ignored
+    # by _effective_mg_summaries if this is interrupted
+    _cleanup_stale_mg_dirs(store_dir, new_bid)
+    return n_folded
+
+
 def incremental_dedup_sink(store_dir: str, out_dir: str,
                            fail_after_output_for: tuple[int, ...] = (),
                            fail_after_all_writes_for:
@@ -153,49 +365,24 @@ def incremental_dedup_sink(store_dir: str, out_dir: str,
         incremental_dedup,
         normalized_text,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
 
-    already_failed: set[int] = set()
+    crash = _crash_once()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         digests = batch_df.select(
             "doc_id", F.md5(normalized_text()).alias("text_digest"))
-        # batch_id < current: a replayed batch (crash after the
-        # store write, before the checkpoint commit) must see
-        # PRE-batch state, never its own digests — partition
-        # pruning makes the filter a directory skip, not a scan.
-        store = _read_store(spark, store_dir)
-        if store is None:       # first batch: store not created yet
-            seen = spark.createDataFrame([], "text_digest string")
-        else:
-            seen = (store
-                    .filter(F.col("batch_id") < F.lit(batch_id))
-                    .select("text_digest"))
+        # partition pruning makes the batch_id < current filter a
+        # directory skip, not a scan
+        seen, = _prior_state(batch_df.sparkSession, batch_id,
+                             (store_dir, "text_digest string"))
         # localCheckpoint: the survivor set feeds TWO writes (output +
         # store merge); without the cut the second write would
         # recompute the anti-join.
         survivors = incremental_dedup(seen, digests).localCheckpoint()
-        writer_conf = {"partitionOverwriteMode": "dynamic"}
-        (survivors.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**writer_conf)
-         .partitionBy("batch_id").parquet(out_dir))
-        if (batch_id in fail_after_output_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash between writes, batch {batch_id}")
-        (survivors.select("text_digest")
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**writer_conf)
-         .partitionBy("batch_id").parquet(store_dir))
-        if (batch_id in fail_after_all_writes_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after last write, batch {batch_id}")
+        _write_batch(survivors, batch_id, out_dir)
+        crash(batch_id, fail_after_output_for, "between writes")
+        _write_batch(survivors.select("text_digest"), batch_id, store_dir)
+        crash(batch_id, fail_after_all_writes_for, "after last write")
 
     return process
 
@@ -230,47 +417,21 @@ def minhash_incremental_sink(index_dir: str, shingle_dir: str,
         minhash_incremental_from_index,
         shingle_docs,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
 
-    already_failed: set[int] = set()
+    crash = _crash_once()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         sh = shingle_docs(batch_df).localCheckpoint()
-        idx_store = _read_store(spark, index_dir)
-        sh_store = _read_store(spark, shingle_dir)
-        if idx_store is None or sh_store is None:
-            # first batch: stores not created yet
-            idx = spark.createDataFrame(
-                [], "doc_id long, band2 int, sig2 string")
-            seen_sh = spark.createDataFrame(
-                [], "doc_id long, shingles array<string>")
-        else:
-            idx = (idx_store
-                   .filter(F.col("batch_id") < F.lit(batch_id))
-                   .select("doc_id", "band2", "sig2"))
-            seen_sh = (sh_store
-                       .filter(F.col("batch_id") < F.lit(batch_id))
-                       .select("doc_id", "shingles"))
+        idx, seen_sh = _prior_state(
+            batch_df.sparkSession, batch_id,
+            (index_dir, "doc_id long, band2 int, sig2 string"),
+            (shingle_dir, "doc_id long, shingles array<string>"))
         report = minhash_incremental_from_index(idx, seen_sh, sh) \
             .localCheckpoint()
-        conf = {"partitionOverwriteMode": "dynamic"}
-        (report.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(out_dir))
-        (banded_buckets(sh).withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(index_dir))
-        (sh.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(shingle_dir))
-        if (batch_id in fail_after_all_writes_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after last write, batch {batch_id}")
+        _write_batch(report, batch_id, out_dir)
+        _write_batch(banded_buckets(sh), batch_id, index_dir)
+        _write_batch(sh, batch_id, shingle_dir)
+        crash(batch_id, fail_after_all_writes_for, "after last write")
 
     return process
 
@@ -300,52 +461,25 @@ def setjoin_index_sink(index_dir: str, sets_dir: str, out_dir: str,
         setjoin_incremental_from_index,
         shingle_fp_sets,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
 
-    already_failed: set[int] = set()
+    crash = _crash_once()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         sets = shingle_fp_sets(batch_df).localCheckpoint()
-        idx_store = _read_store(spark, index_dir)
-        set_store = _read_store(spark, sets_dir)
-        if idx_store is None or set_store is None:
-            idx = spark.createDataFrame(
-                [], "doc_id long, n int, pos int, fp long")
-            seen_sets = spark.createDataFrame(
-                [], "doc_id long, fps array<bigint>")
-        else:
-            # pre-r19 index partitions carry no pos column; the
-            # operator reads them as pos=1 (loosest sound bound) —
-            # see setjoin.py::prefix_entries' migration note.
-            idx_cols = (["doc_id", "n", "pos", "fp"]
-                        if "pos" in idx_store.columns
-                        else ["doc_id", "n", "fp"])
-            idx = (idx_store
-                   .filter(F.col("batch_id") < F.lit(batch_id))
-                   .select(*idx_cols))
-            seen_sets = (set_store
-                         .filter(F.col("batch_id") < F.lit(batch_id))
-                         .select("doc_id", "fps"))
+        # pre-r19 index partitions carry no pos column; the operator
+        # reads them as pos=1 (loosest sound bound) — see
+        # setjoin.py::prefix_entries' migration note.
+        idx, seen_sets = _prior_state(
+            batch_df.sparkSession, batch_id,
+            (index_dir, "doc_id long, n int, pos int, fp long"),
+            (sets_dir, "doc_id long, fps array<bigint>"),
+            optional=("pos",))
         report = setjoin_incremental_from_index(idx, seen_sets, sets) \
             .localCheckpoint()
-        conf = {"partitionOverwriteMode": "dynamic"}
-        (report.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(out_dir))
-        (prefix_entries(sets).withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(index_dir))
-        (sets.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(sets_dir))
-        if (batch_id in fail_after_all_writes_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after last write, batch {batch_id}")
+        _write_batch(report, batch_id, out_dir)
+        _write_batch(prefix_entries(sets), batch_id, index_dir)
+        _write_batch(sets, batch_id, sets_dir)
+        crash(batch_id, fail_after_all_writes_for, "after last write")
 
     return process
 
@@ -696,49 +830,23 @@ def ann_index_sink(index_dir: str, vector_dir: str, out_dir: str,
         ann_incremental_from_index,
         lsh_table_buckets_vec,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
 
-    already_failed: set[int] = set()
+    crash = _crash_once()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         batch = batch_df.select("vec_id", "embedding").localCheckpoint()
-        idx_store = _read_store(spark, index_dir)
-        vec_store = _read_store(spark, vector_dir)
-        if idx_store is None or vec_store is None:
-            # first batch: stores not created yet
-            idx = spark.createDataFrame([], "vec_id long, bucket int")
-            vecs = spark.createDataFrame(
-                [], "vec_id long, embedding array<float>")
-        else:
-            idx = (idx_store
-                   .filter(F.col("batch_id") < F.lit(batch_id))
-                   .select("vec_id", "bucket"))
-            vecs = (vec_store
-                    .filter(F.col("batch_id") < F.lit(batch_id))
-                    .select("vec_id", "embedding"))
+        idx, vecs = _prior_state(
+            batch_df.sparkSession, batch_id,
+            (index_dir, "vec_id long, bucket int"),
+            (vector_dir, "vec_id long, embedding array<float>"))
         report = ann_incremental_from_index(idx, vecs, batch) \
             .localCheckpoint()
-        conf = {"partitionOverwriteMode": "dynamic"}
-        (report.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(out_dir))
-        (batch.select(
-            "vec_id",
-            F.explode(lsh_table_buckets_vec("embedding")).alias("bucket"))
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(index_dir))
-        (batch.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(vector_dir))
-        if (batch_id in fail_after_all_writes_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after last write, batch {batch_id}")
+        _write_batch(report, batch_id, out_dir)
+        buckets = F.explode(lsh_table_buckets_vec("embedding"))
+        _write_batch(batch.select("vec_id", buckets.alias("bucket")),
+                     batch_id, index_dir)
+        _write_batch(batch, batch_id, vector_dir)
+        crash(batch_id, fail_after_all_writes_for, "after last write")
 
     return process
 
@@ -772,50 +880,23 @@ def image_index_sink(index_dir: str, fps_dir: str, out_dir: str,
         image_dhash,
         image_incremental_from_index,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
 
-    already_failed: set[int] = set()
+    crash = _crash_once()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         fps = image_dhash(batch_df.select("doc_id", "payload")) \
             .localCheckpoint()
-        idx_store = _read_store(spark, index_dir)
-        fps_store = _read_store(spark, fps_dir)
-        if idx_store is None or fps_store is None:
-            idx = spark.createDataFrame(
-                [], "doc_id long, band_id int, band_val long")
-            seen_fps = spark.createDataFrame(
-                [], "doc_id long, band0 long, band1 long, "
-                    "band2 long, band3 long")
-        else:
-            idx = (idx_store
-                   .filter(F.col("batch_id") < F.lit(batch_id))
-                   .select("doc_id", "band_id", "band_val"))
-            seen_fps = (fps_store
-                        .filter(F.col("batch_id") < F.lit(batch_id))
-                        .select("doc_id", "band0", "band1",
-                                "band2", "band3"))
+        idx, seen_fps = _prior_state(
+            batch_df.sparkSession, batch_id,
+            (index_dir, "doc_id long, band_id int, band_val long"),
+            (fps_dir, "doc_id long, band0 long, band1 long, "
+                      "band2 long, band3 long"))
         report = image_incremental_from_index(idx, seen_fps, fps) \
             .localCheckpoint()
-        conf = {"partitionOverwriteMode": "dynamic"}
-        (report.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(out_dir))
-        (image_band_entries(fps)
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(index_dir))
-        (fps.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(fps_dir))
-        if (batch_id in fail_after_all_writes_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after last write, batch {batch_id}")
+        _write_batch(report, batch_id, out_dir)
+        _write_batch(image_band_entries(fps), batch_id, index_dir)
+        _write_batch(fps, batch_id, fps_dir)
+        crash(batch_id, fail_after_all_writes_for, "after last write")
 
     return process
 
@@ -876,11 +957,8 @@ def semdedup_assign_sink(cents_dir: str, assign_dir: str,
         semdedup_assign_with_cents,
         semdedup_incremental_from_assign,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
 
-    already_failed: set[int] = set()
+    crash = _crash_once()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -891,38 +969,17 @@ def semdedup_assign_sink(cents_dir: str, assign_dir: str,
         batch = batch_df.select("vec_id", "embedding").localCheckpoint()
         batch_assign = semdedup_assign_with_cents(batch, cents) \
             .localCheckpoint()   # two consumers: pair scoring + store
-        assign_store = _read_store(spark, assign_dir)
-        vec_store = _read_store(spark, vector_dir)
-        if assign_store is None or vec_store is None:
-            seen_assign = spark.createDataFrame(
-                [], "vec_id long, cluster long, ccos double")
-            seen_vecs = spark.createDataFrame(
-                [], "vec_id long, embedding array<float>")
-        else:
-            seen_assign = (assign_store
-                           .filter(F.col("batch_id") < F.lit(batch_id))
-                           .select("vec_id", "cluster", "ccos"))
-            seen_vecs = (vec_store
-                         .filter(F.col("batch_id") < F.lit(batch_id))
-                         .select("vec_id", "embedding"))
+        seen_assign, seen_vecs = _prior_state(
+            spark, batch_id,
+            (assign_dir, "vec_id long, cluster long, ccos double"),
+            (vector_dir, "vec_id long, embedding array<float>"))
         report = semdedup_incremental_from_assign(
             seen_assign, seen_vecs, batch_assign, batch) \
             .localCheckpoint()
-        conf = {"partitionOverwriteMode": "dynamic"}
-        (report.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(out_dir))
-        (batch_assign.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(assign_dir))
-        (batch.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(vector_dir))
-        if (batch_id in fail_after_all_writes_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after last write, batch {batch_id}")
+        _write_batch(report, batch_id, out_dir)
+        _write_batch(batch_assign, batch_id, assign_dir)
+        _write_batch(batch, batch_id, vector_dir)
+        crash(batch_id, fail_after_all_writes_for, "after last write")
 
     return process
 
@@ -981,17 +1038,11 @@ def _compact_distinct_store(spark: SparkSession, store_dir: str,
     batch_id=-1 base — shared by the digest and profile-values
     compactors (both consumers are idempotent under duplicate rows,
     the property that makes the crash window harmless)."""
-    import shutil
-
     df = spark.read.parquet(store_dir)
-    old = (df.filter((F.col("batch_id") >= 0)
-                     & (F.col("batch_id") <= upto_batch_id))
-           .select(*cols))
-    base = spark.read.parquet(store_dir) \
-        .filter(F.col("batch_id") == -1).select(*cols)
-    n_folded = (df.filter((F.col("batch_id") >= 0)
-                          & (F.col("batch_id") <= upto_batch_id))
-                .select("batch_id").distinct().count())
+    old = df.filter((F.col("batch_id") >= 0)
+                    & (F.col("batch_id") <= upto_batch_id))
+    base = df.filter(F.col("batch_id") == -1).select(*cols)
+    n_folded = old.select("batch_id").distinct().count()
     if n_folded == 0:
         return 0
     # Materialize the merged set BEFORE the overwrite: the
@@ -1003,22 +1054,14 @@ def _compact_distinct_store(spark: SparkSession, store_dir: str,
     # job reads blocks, never the parquet being rewritten.  Compaction
     # still requires the stream to be STOPPED (see docstring) — the
     # checkpoint closes the self-read hazard, not concurrent appends.
-    merged = (base.unionByName(old).distinct()
+    merged = (base.unionByName(old.select(*cols)).distinct()
               .coalesce(files_per_partition)
-              .withColumn("batch_id", F.lit(-1))
               .localCheckpoint())
-    (merged.write.mode("overwrite")
-     .options(partitionOverwriteMode="dynamic")
-     .partitionBy("batch_id").parquet(store_dir))
+    _write_batch(merged, -1, store_dir)
     # cleanup AFTER the base partition is durable; a crash here only
     # leaves harmless duplicates (see docstring)
-    import os
-    for name in os.listdir(store_dir):
-        if not name.startswith("batch_id="):
-            continue
-        bid = name.split("=", 1)[1]
-        if bid != "-1" and 0 <= int(bid) <= upto_batch_id:
-            shutil.rmtree(os.path.join(store_dir, name))
+    _drop_batches(store_dir, [b for b in _batch_ids(store_dir)
+                              if 0 <= b <= upto_batch_id])
     return n_folded
 
 
@@ -1070,27 +1113,24 @@ def ingest_audit_sink(store_dir: str,
     from cga_logs_to_kinesis_spark.operators.ingest_audit import (
         shard_audit_aggs,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
 
-    already_failed: set[int] = set()
+    return _partials_sink(
+        store_dir,
+        lambda b: (b.groupBy(F.col("shard").cast("bigint").alias("shard"))
+                   .agg(*shard_audit_aggs())),
+        fail_after_write_for)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        report = (batch_df
-                  .groupBy(F.col("shard").cast("bigint").alias("shard"))
-                  .agg(*shard_audit_aggs()))
-        (report.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(store_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
 
-    return process
+def _ingest_audit_fold(g):
+    """Counts/sums add, the doc-id extrema fold with MIN/MAX."""
+    return g.agg(*_sums("n_lines", "n_corrupt", "n_valid", "n_null_text",
+                        "n_missing_id", "n_chars_liars"),
+                 F.min("min_doc_id").alias("min_doc_id"),
+                 F.max("max_doc_id").alias("max_doc_id"),
+                 *_sums("total_chars"))
+
+
+_INGEST_AUDIT_MERGE = (["shard"], _ingest_audit_fold)
 
 
 def ingest_audit_report_from_store(spark: SparkSession,
@@ -1099,25 +1139,14 @@ def ingest_audit_report_from_store(spark: SparkSession,
     per-shard report — bit-identical to ``q_jsonl_ingest_report`` over
     the same files (counts/sums add, min/max fold).  Goes through
     ``_read_store``: a never-created store is empty state."""
-    s = _read_store(spark, store_dir)
+    s = _fold_store(spark, store_dir, *_INGEST_AUDIT_MERGE)
     if s is None:
         return spark.createDataFrame(
             [], "shard long, n_lines long, n_corrupt long, "
                 "n_valid long, n_null_text long, n_missing_id long, "
                 "n_chars_liars long, min_doc_id long, "
                 "max_doc_id long, total_chars long")
-    s = _effective_mg_summaries(s)   # watermark-aware: compacted base
-    return (s.groupBy("shard")
-            .agg(F.sum("n_lines").alias("n_lines"),
-                 F.sum("n_corrupt").alias("n_corrupt"),
-                 F.sum("n_valid").alias("n_valid"),
-                 F.sum("n_null_text").alias("n_null_text"),
-                 F.sum("n_missing_id").alias("n_missing_id"),
-                 F.sum("n_chars_liars").alias("n_chars_liars"),
-                 F.min("min_doc_id").alias("min_doc_id"),
-                 F.max("max_doc_id").alias("max_doc_id"),
-                 F.sum("total_chars").alias("total_chars"))
-            .orderBy("shard"))
+    return s.orderBy("shard")
 
 
 def components_incremental_sink(labels_dir: str,
@@ -1160,40 +1189,23 @@ def components_incremental_sink(labels_dir: str,
     from cga_logs_to_kinesis_spark.operators.dedup import (
         connected_components,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
 
-    already_failed: set[int] = set()
+    crash = _crash_once()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         edges = batch_df.select("doc_a", "doc_b")
-        # _read_store, NOT a bare try/except: mistaking a transient
-        # read error for "first batch" here would write a labels-only-
-        # from-this-batch table as the newest version — authoritative
-        # forever, silently discarding every cluster learned so far.
-        label_store = _read_store(spark, labels_dir)
-        prev_max = None
-        if label_store is not None:
-            store = label_store.filter(
-                F.col("batch_id") < F.lit(batch_id))
-            prev_max = store.agg(F.max("batch_id")).first()[0]
-        if prev_max is not None:
-            star = (store.filter(F.col("batch_id") == prev_max)
-                    .select(F.col("comp").alias("doc_a"),
+        # _read_store (inside _prior_version), NOT a bare try/except:
+        # mistaking a transient read error for "first batch" here would
+        # write a labels-only-from-this-batch table as the newest
+        # version — authoritative forever, silently discarding every
+        # cluster learned so far.
+        prev = _prior_version(batch_df.sparkSession, labels_dir, batch_id)
+        if prev is not None:
+            edges = edges.unionByName(
+                prev.select(F.col("comp").alias("doc_a"),
                             F.col("doc").alias("doc_b")))
-            edges = edges.unionByName(star)
-        labels = connected_components(edges)
-        (labels.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(labels_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
+        _write_batch(connected_components(edges), batch_id, labels_dir)
+        crash(batch_id, fail_after_write_for, "after write")
 
     return process
 
@@ -1209,20 +1221,8 @@ def compact_label_store(labels_dir: str) -> int:
     ``batch_id < current`` and must find its pre-batch state, not the
     first-batch path.  Run with the stream stopped.  Returns versions
     removed."""
-    import os
-    import shutil
-
-    bids = []
-    for name in os.listdir(labels_dir):
-        if name.startswith("batch_id="):
-            bids.append(int(name.split("=", 1)[1]))
-    keep = set(sorted(bids)[-2:])
-    removed = 0
-    for bid in bids:
-        if bid not in keep:
-            shutil.rmtree(os.path.join(labels_dir, f"batch_id={bid}"))
-            removed += 1
-    return removed
+    bids = sorted(_batch_ids(labels_dir))
+    return _drop_batches(labels_dir, bids[:-2])
 
 
 # ---------------------------------------------------------------------------
@@ -1272,26 +1272,14 @@ def table_profile_sink(partials_dir: str, values_dir: str,
         profile_partials,
         profile_value_pairs,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import FatalDeliveryError
 
-    already_failed: set[int] = set()
+    crash = _crash_once()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        (profile_partials(batch_df)
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(partials_dir))
-        (profile_value_pairs(batch_df).distinct()
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(values_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
+        _write_batch(profile_partials(batch_df), batch_id, partials_dir)
+        _write_batch(profile_value_pairs(batch_df).distinct(), batch_id,
+                     values_dir)
+        crash(batch_id, fail_after_write_for, "after write")
 
     return process
 
@@ -1356,67 +1344,19 @@ def heavy_hitters_sink(store_dir: str,
         _mg_partitions,
         tokenize_docs,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
 
-    already_failed: set[int] = set()
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        summary = tokenize_docs(batch_df).mapInPandas(
-            _mg_partitions, MG_SUMMARY_SCHEMA)
-        (summary.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(store_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
-
-    return process
+    return _partials_sink(
+        store_dir,
+        lambda b: tokenize_docs(b).mapInPandas(_mg_partitions,
+                                               MG_SUMMARY_SCHEMA),
+        fail_after_write_for)
 
 
-def _effective_mg_summaries(s: DataFrame) -> DataFrame:
-    """The live rows of a heavy-hitters MG store: the newest base
-    partition (most-negative ``batch_id``; ``-(upto+2)`` encodes that
-    it folds every batch partition ``<= upto``) plus batch partitions
-    ABOVE its fold watermark.  Encoding the watermark in the
-    partition id — instead of the digest stores' plain ``-1`` base —
-    is what makes compaction crash-safe for a SUMMING consumer: a
-    crash between the base write and the old-partition cleanup leaves
-    stale dirs behind, and a reader that summed base + stale batches
-    would double-count; here stale batches sit at or below the
-    watermark and are excluded by construction, so the leftover is
-    dead weight, not corruption (re-run compaction to finish the
-    cleanup)."""
-    min_bid = s.agg(F.min("batch_id")).first()[0]
-    if min_bid is not None and min_bid < -1:
-        upto = -min_bid - 2
-        return s.filter((F.col("batch_id") == min_bid)
-                        | (F.col("batch_id") > upto))
-    return s
-
-
-def _cleanup_stale_mg_dirs(store_dir: str, base_bid: int) -> int:
-    """Remove batch directories a summing reader already ignores:
-    older base partitions and batch partitions at or below the live
-    base's fold watermark (``-base_bid - 2``).  Safe to run any time
-    ``base_bid`` is the newest (most-negative) base on disk."""
-    import os
-    import shutil
-
-    watermark = -base_bid - 2
-    removed = 0
-    for name in os.listdir(store_dir):
-        if not name.startswith("batch_id="):
-            continue
-        bid = int(name.split("=", 1)[1])
-        if bid != base_bid and (bid < -1 or 0 <= bid <= watermark):
-            shutil.rmtree(os.path.join(store_dir, name))
-            removed += 1
-    return removed
+# Token rows carry part_tokens = 0 and each summary's one NULL-token
+# row carries cnt = 0 (operators/sketches.py::_mg_partitions), so
+# summing both columns per token merges counters and token totals at
+# once.
+_MG_MERGE = (["token"], _sum_fold("cnt", "part_tokens"))
 
 
 def compact_heavy_hitters_store(spark: SparkSession, store_dir: str,
@@ -1447,48 +1387,8 @@ def compact_heavy_hitters_store(spark: SparkSession, store_dir: str,
     stream stopped; a crash between the base write and the cleanup
     leaves ignored stale directories, and a RE-RUN (even one that
     finds nothing new to fold) finishes the cleanup."""
-    df = _read_store(spark, store_dir)
-    if df is None:
-        return 0
-    live = _effective_mg_summaries(df)
-    fold_sel = (F.col("batch_id") < -1) | (F.col("batch_id")
-                                           <= upto_batch_id)
-    to_fold = live.filter(fold_sel)
-    stats = (to_fold.filter(F.col("batch_id") >= 0)
-             .agg(F.countDistinct("batch_id").alias("n"),
-                  F.max("batch_id").alias("mx")).first())
-    n_folded, max_folded = stats["n"], stats["mx"]
-    if n_folded == 0:
-        # Nothing new to fold — but a prior run may have crashed
-        # between its base write and its cleanup, so finish the
-        # cleanup the docstring promises before returning.
-        min_bid = df.agg(F.min("batch_id")).first()[0]
-        if min_bid is not None and min_bid < -1:
-            _cleanup_stale_mg_dirs(store_dir, min_bid)
-        return 0
-    tokens = (to_fold.filter(F.col("token").isNotNull())
-              .groupBy("token").agg(F.sum("cnt").alias("cnt"))
-              .withColumn("part_tokens", F.lit(0).cast("long")))
-    total = (to_fold.agg(F.sum("part_tokens").alias("pt"))
-             .select(F.lit(None).cast("string").alias("token"),
-                     F.lit(0).cast("long").alias("cnt"),
-                     F.coalesce(F.col("pt"), F.lit(0)).cast("long")
-                     .alias("part_tokens")))
-    new_bid = -(max_folded + 2)
-    # Materialized before the write for the same self-read reason as
-    # _compact_distinct_store: the old base partition is both input
-    # and (via the cleanup below) removed state.
-    merged = (tokens.unionByName(total)
-              .coalesce(files_per_partition)
-              .withColumn("batch_id", F.lit(new_bid))
-              .localCheckpoint())
-    (merged.write.mode("overwrite")
-     .options(partitionOverwriteMode="dynamic")
-     .partitionBy("batch_id").parquet(store_dir))
-    # cleanup AFTER the new base is durable; stale dirs are ignored
-    # by _effective_mg_summaries if this is interrupted
-    _cleanup_stale_mg_dirs(store_dir, new_bid)
-    return n_folded
+    return _compact_mergeable_store(spark, store_dir, upto_batch_id,
+                                    *_MG_MERGE, files_per_partition)
 
 
 def heavy_hitters_from_store(spark: SparkSession,
@@ -1506,16 +1406,14 @@ def heavy_hitters_from_store(spark: SparkSession,
     safe under integer division on any engine."""
     from cga_logs_to_kinesis_spark.operators.sketches import MG_COUNTERS
 
-    s = _read_store(spark, store_dir)
+    s = _fold_store(spark, store_dir, *_MG_MERGE)
     if s is None:
         return spark.createDataFrame(
             [], "token string, cnt_lower long, cnt_upper long")
-    s = _effective_mg_summaries(s)
     total = (s.agg(F.sum("part_tokens")).first()[0]) or 0
     slack = total // (MG_COUNTERS + 1) + 1
     folded = (s.filter(F.col("token").isNotNull())
-              .groupBy("token")
-              .agg(F.sum("cnt").alias("cnt_lower")))
+              .select("token", F.col("cnt").alias("cnt_lower")))
     return (folded
             .withColumn("cnt_upper",
                         F.col("cnt_lower") + F.lit(int(slack)))
@@ -1552,29 +1450,15 @@ def bloom_positions_sink(store_dir: str,
         _fp_col,
         _positions_expr,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
 
-    already_failed: set[int] = set()
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        pos = (batch_df.select(_fp_col().alias("fp"))
-               .filter(F.col("fp").isNotNull())
-               .select(F.explode(F.expr(_positions_expr("fp")))
-                       .alias("pos"))
-               .distinct())
-        (pos.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(store_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
-
-    return process
+    return _partials_sink(
+        store_dir,
+        lambda b: (b.select(_fp_col().alias("fp"))
+                   .filter(F.col("fp").isNotNull())
+                   .select(F.explode(F.expr(_positions_expr("fp")))
+                           .alias("pos"))
+                   .distinct()),
+        fail_after_write_for)
 
 
 def compact_bloom_store(spark: SparkSession, store_dir: str,
@@ -1752,9 +1636,6 @@ def funnel_state_sink(store_dir: str,
     from cga_logs_to_kinesis_spark.operators.temporal import (
         FUNNEL_STAGES,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
 
     stage_idx = F.lit(None).cast("int")
     for i, s in enumerate(reversed(FUNNEL_STAGES),
@@ -1763,39 +1644,26 @@ def funnel_state_sink(store_dir: str,
             F.col("event_type") == s,
             F.lit(len(FUNNEL_STAGES) - i)).otherwise(stage_idx)
 
-    already_failed: set[int] = set()
+    crash = _crash_once()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         # NULL us rows are kept: collect_set drops the NULLs but the
         # (user, stage) group row survives, carrying the stage-1
         # membership the batch groupBy would count (see fold).
-        partial = (batch_df
-                   .filter(F.col("event_type").isin(*FUNNEL_STAGES))
-                   .select("user_id", stage_idx.alias("stage"), "us")
-                   .groupBy("user_id", "stage")
-                   .agg(F.collect_set("us").alias("times"))
-                   .withColumn("reached", F.lit(0)))
-        store = _read_store(spark, store_dir)
-        merged = partial
-        if store is not None:
-            below = store.filter(F.col("batch_id") < F.lit(batch_id))
-            prev_max = below.agg(F.max("batch_id")).first()[0]
-            if prev_max is not None:
-                prev = (below.filter(F.col("batch_id") == prev_max)
-                        .select("user_id", "stage", "times", "reached"))
-                merged = partial.select(prev.columns).unionByName(prev)
+        merged = (batch_df
+                  .filter(F.col("event_type").isin(*FUNNEL_STAGES))
+                  .select("user_id", stage_idx.alias("stage"), "us")
+                  .groupBy("user_id", "stage")
+                  .agg(F.collect_set("us").alias("times"))
+                  .withColumn("reached", F.lit(0)))
+        prev = _prior_version(batch_df.sparkSession, store_dir, batch_id)
+        if prev is not None:
+            prev = prev.select("user_id", "stage", "times", "reached")
+            merged = merged.select(prev.columns).unionByName(prev)
         state = (merged.groupBy("user_id")
                  .applyInPandas(_funnel_fold_user, FUNNEL_STATE_SCHEMA))
-        (state.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(store_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
+        _write_batch(state, batch_id, store_dir)
+        crash(batch_id, fail_after_write_for, "after write")
 
     return process
 
@@ -1872,31 +1740,16 @@ def ivf_index_sink(assign_dir: str, code_dir: str, vector_dir: str,
         _nearest_clusters,
         sq8_encode,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
 
-    already_failed: set[int] = set()
+    crash = _crash_once()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.select("vec_id", "embedding").localCheckpoint()
-        conf = {"partitionOverwriteMode": "dynamic"}
-        (_nearest_clusters(batch, cents, "cand_id", 1)
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(assign_dir))
-        (sq8_encode(batch, "cand_id")
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(code_dir))
-        (batch.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(vector_dir))
-        if (batch_id in fail_after_all_writes_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after last write, batch {batch_id}")
+        _write_batch(_nearest_clusters(batch, cents, "cand_id", 1),
+                     batch_id, assign_dir)
+        _write_batch(sq8_encode(batch, "cand_id"), batch_id, code_dir)
+        _write_batch(batch, batch_id, vector_dir)
+        crash(batch_id, fail_after_all_writes_for, "after last write")
 
     return process
 
@@ -1951,26 +1804,28 @@ def encoding_anomaly_sink(store_dir: str,
         encoding_anomaly_aggs,
         encoding_per_doc,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
+
+    return _partials_sink(
+        store_dir,
+        lambda b: (encoding_per_doc(b)
+                   .groupBy("source").agg(*encoding_anomaly_aggs())),
+        fail_after_write_for)
+
+
+def _encoding_cols() -> list[str]:
+    from cga_logs_to_kinesis_spark.operators.ingest_audit import (
+        ENC_PATTERNS,
     )
 
-    already_failed: set[int] = set()
+    return ["n_docs", "n_chars", *ENC_PATTERNS, "dirty_docs"]
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        report = (encoding_per_doc(batch_df)
-                  .groupBy("source").agg(*encoding_anomaly_aggs()))
-        (report.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(store_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
 
-    return process
+def _encoding_fold(g):
+    """Every encoding-audit column is a count or sum."""
+    return g.agg(*_sums(*_encoding_cols()))
+
+
+_ENCODING_MERGE = (["source"], _encoding_fold)
 
 
 def encoding_anomaly_report_from_store(spark: SparkSession,
@@ -1980,22 +1835,12 @@ def encoding_anomaly_report_from_store(spark: SparkSession,
     same documents (every column is a count or sum).  Goes through
     ``_read_store`` like every sibling reader: a never-created or
     zero-footer store is empty state, not a crash."""
-    from cga_logs_to_kinesis_spark.operators.ingest_audit import (
-        ENC_PATTERNS,
-    )
-
-    s = _read_store(spark, store_dir)
+    s = _fold_store(spark, store_dir, *_ENCODING_MERGE)
     if s is None:
-        cols = ["n_docs", "n_chars", *ENC_PATTERNS, "dirty_docs"]
         return spark.createDataFrame(
             [], "source string, " + ", ".join(f"{c} long"
-                                              for c in cols))
-    s = _effective_mg_summaries(s)   # watermark-aware: compacted base
-    sum_cols = [c for c in s.columns
-                if c not in ("source", "batch_id")]
-    return (s.groupBy("source")
-            .agg(*[F.sum(c).alias(c) for c in sum_cols])
-            .orderBy("source"))
+                                              for c in _encoding_cols()))
+    return s.orderBy("source")
 
 
 def script_mixing_sink(store_dir: str,
@@ -2011,26 +1856,29 @@ def script_mixing_sink(store_dir: str,
         script_counts_per_doc,
         script_mixing_aggs,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
+
+    return _partials_sink(
+        store_dir,
+        lambda b: (script_counts_per_doc(b)
+                   .groupBy("source").agg(*script_mixing_aggs())),
+        fail_after_write_for)
+
+
+def _script_mixing_cols() -> list[str]:
+    from cga_logs_to_kinesis_spark.operators.ingest_audit import (
+        SCRIPT_CLASSES,
     )
 
-    already_failed: set[int] = set()
+    return ["n_docs", *SCRIPT_CLASSES, "multi_script_docs",
+            "confusable_docs"]
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        report = (script_counts_per_doc(batch_df)
-                  .groupBy("source").agg(*script_mixing_aggs()))
-        (report.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(store_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
 
-    return process
+def _script_mixing_fold(g):
+    """Every script-mixing column is a count or sum."""
+    return g.agg(*_sums(*_script_mixing_cols()))
+
+
+_SCRIPT_MIXING_MERGE = (["source"], _script_mixing_fold)
 
 
 def script_mixing_report_from_store(spark: SparkSession,
@@ -2039,23 +1887,12 @@ def script_mixing_report_from_store(spark: SparkSession,
     report — bit-identical to ``q_script_mixing_report`` (every
     column is a count or sum); never-created store reads as a typed
     empty frame."""
-    from cga_logs_to_kinesis_spark.operators.ingest_audit import (
-        SCRIPT_CLASSES,
-    )
-
-    s = _read_store(spark, store_dir)
+    s = _fold_store(spark, store_dir, *_SCRIPT_MIXING_MERGE)
     if s is None:
-        cols = ["n_docs", *SCRIPT_CLASSES,
-                "multi_script_docs", "confusable_docs"]
         return spark.createDataFrame(
-            [], "source string, " + ", ".join(f"{c} long"
-                                              for c in cols))
-    s = _effective_mg_summaries(s)   # watermark-aware: compacted base
-    sum_cols = [c for c in s.columns
-                if c not in ("source", "batch_id")]
-    return (s.groupBy("source")
-            .agg(*[F.sum(c).alias(c) for c in sum_cols])
-            .orderBy("source"))
+            [], "source string, " + ", ".join(
+                f"{c} long" for c in _script_mixing_cols()))
+    return s.orderBy("source")
 
 
 # ---------------------------------------------------------------------------
@@ -2083,26 +1920,13 @@ def skew_freq_sink(store_dir: str,
     exact frequency partials appended batch_id-keyed.  The sink reads
     nothing across batches; per-batch work is one partial-agg groupBy
     of the batch."""
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
+    return _partials_sink(
+        store_dir,
+        lambda b: b.groupBy("key_col", "k").agg(F.count("*").alias("f")),
+        fail_after_write_for)
 
-    already_failed: set[int] = set()
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_df.groupBy("key_col", "k")
-         .agg(F.count("*").alias("f"))
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(store_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
-
-    return process
+_SKEW_MERGE = (["key_col", "k"], _sum_fold("f"))
 
 
 def skew_frequencies_from_store(spark: SparkSession,
@@ -2113,68 +1937,19 @@ def skew_frequencies_from_store(spark: SparkSession,
     ANY micro-batch split (counts sum).  Reads through the
     watermark-aware live-row filter so a crashed compaction cannot
     double-count."""
-    s = _read_store(spark, store_dir)
+    s = _fold_store(spark, store_dir, *_SKEW_MERGE)
     if s is None:
         return spark.createDataFrame(
             [], "key_col string, k string, f long")
-    return (_effective_mg_summaries(s)
-            .groupBy("key_col", "k").agg(F.sum("f").alias("f")))
-
-
-def _compact_mergeable_store(spark: SparkSession, store_dir: str,
-                             upto_batch_id: int,
-                             group_cols: list[str],
-                             fold,
-                             files_per_partition: int = 1) -> int:
-    """Generic compactor for a MERGEABLE-partials store: fold batch
-    partitions at or below ``upto_batch_id`` (plus any existing base)
-    into one merged base at ``batch_id = -(max_folded + 2)`` — the
-    heavy-hitters watermark discipline, because a folding consumer
-    must never see base + stale batch rows together (see
-    _effective_mg_summaries).  ``fold(grouped)`` supplies the merge
-    aggregates (sums / mins / maxes — whatever the family's partials
-    re-fold with).  Run with the stream stopped; re-run to finish an
-    interrupted cleanup."""
-    df = _read_store(spark, store_dir)
-    if df is None:
-        return 0
-    live = _effective_mg_summaries(df)
-    fold_sel = (F.col("batch_id") < -1) | (F.col("batch_id")
-                                           <= upto_batch_id)
-    to_fold = live.filter(fold_sel)
-    stats = (to_fold.filter(F.col("batch_id") >= 0)
-             .agg(F.countDistinct("batch_id").alias("n"),
-                  F.max("batch_id").alias("mx")).first())
-    n_folded, max_folded = stats["n"], stats["mx"]
-    if n_folded == 0:
-        min_bid = df.agg(F.min("batch_id")).first()[0]
-        if min_bid is not None and min_bid < -1:
-            _cleanup_stale_mg_dirs(store_dir, min_bid)
-        return 0
-    new_bid = -(max_folded + 2)
-    merged = (fold(to_fold.groupBy(*group_cols))
-              .coalesce(files_per_partition)
-              .withColumn("batch_id", F.lit(new_bid))
-              .localCheckpoint())      # self-read: old base is input
-    (merged.write.mode("overwrite")
-     .options(partitionOverwriteMode="dynamic")
-     .partitionBy("batch_id").parquet(store_dir))
-    _cleanup_stale_mg_dirs(store_dir, new_bid)
-    return n_folded
-
-
-def _sum_fold(*cols: str):
-    """Merge aggregates for a pure-counts partials store."""
-    return lambda g: g.agg(*[F.sum(c).alias(c) for c in cols])
+    return s
 
 
 def compact_skew_freq_store(spark: SparkSession, store_dir: str,
                             upto_batch_id: int,
                             files_per_partition: int = 1) -> int:
     """Fold frequency partials into the watermark base (counts SUM)."""
-    return _compact_mergeable_store(
-        spark, store_dir, upto_batch_id, ["key_col", "k"],
-        _sum_fold("f"), files_per_partition)
+    return _compact_mergeable_store(spark, store_dir, upto_batch_id,
+                                    *_SKEW_MERGE, files_per_partition)
 
 
 def compact_encoding_store(spark: SparkSession, store_dir: str,
@@ -2183,29 +1958,17 @@ def compact_encoding_store(spark: SparkSession, store_dir: str,
     """Fold encoding-audit partials (every column a count/sum) into
     the watermark base — without this the store grows one partition
     set per micro-batch forever."""
-    from cga_logs_to_kinesis_spark.operators.ingest_audit import (
-        ENC_PATTERNS,
-    )
-
-    cols = ["n_docs", "n_chars", *ENC_PATTERNS, "dirty_docs"]
-    return _compact_mergeable_store(
-        spark, store_dir, upto_batch_id, ["source"],
-        _sum_fold(*cols), files_per_partition)
+    return _compact_mergeable_store(spark, store_dir, upto_batch_id,
+                                    *_ENCODING_MERGE, files_per_partition)
 
 
 def compact_script_mixing_store(spark: SparkSession, store_dir: str,
                                 upto_batch_id: int,
                                 files_per_partition: int = 1) -> int:
     """Fold script-mixing partials (counts/sums) into the base."""
-    from cga_logs_to_kinesis_spark.operators.ingest_audit import (
-        SCRIPT_CLASSES,
-    )
-
-    cols = ["n_docs", *SCRIPT_CLASSES,
-            "multi_script_docs", "confusable_docs"]
-    return _compact_mergeable_store(
-        spark, store_dir, upto_batch_id, ["source"],
-        _sum_fold(*cols), files_per_partition)
+    return _compact_mergeable_store(spark, store_dir, upto_batch_id,
+                                    *_SCRIPT_MIXING_MERGE,
+                                    files_per_partition)
 
 
 def compact_ingest_audit_store(spark: SparkSession, store_dir: str,
@@ -2214,17 +1977,9 @@ def compact_ingest_audit_store(spark: SparkSession, store_dir: str,
     """Fold JSONL-audit partials into the base: counts SUM, the
     doc-id extrema fold with MIN/MAX — the same merge the reader
     itself applies, so fold-after-compaction == fold-before."""
-    sums = ["n_lines", "n_corrupt", "n_valid", "n_null_text",
-            "n_missing_id", "n_chars_liars", "total_chars"]
-
-    def fold(g):
-        return g.agg(*[F.sum(c).alias(c) for c in sums],
-                     F.min("min_doc_id").alias("min_doc_id"),
-                     F.max("max_doc_id").alias("max_doc_id"))
-
-    return _compact_mergeable_store(
-        spark, store_dir, upto_batch_id, ["shard"], fold,
-        files_per_partition)
+    return _compact_mergeable_store(spark, store_dir, upto_batch_id,
+                                    *_INGEST_AUDIT_MERGE,
+                                    files_per_partition)
 
 
 def salted_join_plan_from_store(spark: SparkSession,
@@ -2282,45 +2037,46 @@ def corpus_drift_sink(sum_dir: str, values_dir: str, max_doc_id: int,
     from cga_logs_to_kinesis_spark.operators.ingest_audit import (
         drift_per_doc,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
 
-    already_failed: set[int] = set()
+    crash = _crash_once()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         pd = drift_per_doc(batch_df, max_doc_id).localCheckpoint()
-        conf = {"partitionOverwriteMode": "dynamic"}
-        (pd.groupBy("decile")
-         .agg(F.count("*").alias("n_docs"),
-              F.sum("is_blank").alias("blank_docs"),
-              F.sum("chars").alias("total_chars"),
-              # cast the long DIRECTLY to decimal — the exact same
-              # conversion path as the batch query's davg (a double
-              # intermediate is exact only below 2^53, so sharing the
-              # cast chain, not just the target type, is what makes
-              # the folded avg bit-identical by construction)
-              F.sum(F.col("chars").cast(_DEC))
-              .cast(_DEC).alias("sum_chars_dec"))
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(sum_dir))
+        _write_batch(
+            pd.groupBy("decile")
+            .agg(F.count("*").alias("n_docs"),
+                 F.sum("is_blank").alias("blank_docs"),
+                 F.sum("chars").alias("total_chars"),
+                 # cast the long DIRECTLY to decimal — the exact same
+                 # conversion path as the batch query's davg (a double
+                 # intermediate is exact only below 2^53, so sharing the
+                 # cast chain, not just the target type, is what makes
+                 # the folded avg bit-identical by construction)
+                 F.sum(F.col("chars").cast(_DEC))
+                 .cast(_DEC).alias("sum_chars_dec")),
+            batch_id, sum_dir)
         vals = None
         for col in ("source", "lang"):
             part = (pd.select("decile", F.lit(col).alias("col"),
                               F.col(col).alias("val"))
                     .filter(F.col("val").isNotNull()).distinct())
             vals = part if vals is None else vals.unionByName(part)
-        (vals.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(values_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
+        _write_batch(vals, batch_id, values_dir)
+        crash(batch_id, fail_after_write_for, "after write")
 
     return process
+
+
+def _drift_fold(g):
+    """Counts and the exact decimal char sum both SUM; the cast pins
+    the decimal type."""
+    from cga_logs_to_kinesis_spark.functions.exact import _DEC
+
+    return g.agg(*_sums("n_docs", "blank_docs", "total_chars"),
+                 F.sum("sum_chars_dec").cast(_DEC).alias("sum_chars_dec"))
+
+
+_DRIFT_MERGE = (["decile"], _drift_fold)
 
 
 def corpus_drift_from_store(spark: SparkSession, sum_dir: str,
@@ -2334,17 +2090,12 @@ def corpus_drift_from_store(spark: SparkSession, sum_dir: str,
     schema = ("decile int, n_docs long, blank_docs long, "
               "total_chars long, avg_chars double, n_sources long, "
               "n_langs long")
-    s = _read_store(spark, sum_dir)
+    sums = _fold_store(spark, sum_dir, *_DRIFT_MERGE)
     v = _read_store(spark, values_dir)
-    if s is None or v is None:
+    if sums is None or v is None:
         return spark.createDataFrame([], schema)
-    s = _effective_mg_summaries(s)   # watermark-aware: compacted base
-    sums = (s.groupBy("decile")
-            .agg(F.sum("n_docs").alias("n_docs"),
-                 F.sum("blank_docs").alias("blank_docs"),
-                 F.sum("total_chars").alias("total_chars"),
-                 (F.sum("sum_chars_dec").cast("double")
-                  / F.sum("n_docs")).alias("avg_chars")))
+    sums = sums.withColumn("avg_chars", F.col("sum_chars_dec")
+                           .cast("double") / F.col("n_docs"))
     spread = (v.select("decile", "col", "val").distinct()
               .groupBy("decile")
               .agg(F.count(F.when(F.col("col") == "source", 1))
@@ -2366,18 +2117,8 @@ def compact_corpus_drift_sums(spark: SparkSession, store_dir: str,
     """Fold drift sum partials into the watermark base — counts and
     the exact decimal char sum both SUM, so the shared mergeable
     compactor applies with a type-pinning cast on the decimal."""
-    from cga_logs_to_kinesis_spark.functions.exact import _DEC
-
-    def fold(g):
-        return g.agg(F.sum("n_docs").alias("n_docs"),
-                     F.sum("blank_docs").alias("blank_docs"),
-                     F.sum("total_chars").alias("total_chars"),
-                     F.sum("sum_chars_dec").cast(_DEC)
-                     .alias("sum_chars_dec"))
-
-    return _compact_mergeable_store(
-        spark, store_dir, upto_batch_id, ["decile"], fold,
-        files_per_partition)
+    return _compact_mergeable_store(spark, store_dir, upto_batch_id,
+                                    *_DRIFT_MERGE, files_per_partition)
 
 
 def compact_corpus_drift_values(spark: SparkSession, values_dir: str,
@@ -2429,53 +2170,31 @@ def line_df_sink(store_dir: str,
         LINE_MIN_CHARS,
         line_flat,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
 
-    already_failed: set[int] = set()
+    crash = _crash_once()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         docs = batch_df
         if seen_dir is not None:
-            seen = _read_store(spark, seen_dir)
-            if seen is not None:
-                docs = docs.join(
-                    seen.filter(F.col("batch_id") < F.lit(batch_id))
-                    .select("doc_id"),
-                    "doc_id", "left_anti")
+            seen, = _prior_state(batch_df.sparkSession, batch_id,
+                                 (seen_dir, "doc_id long"))
             # fresh docs feed the fold AND the seen-store write
-            docs = docs.localCheckpoint()
-        flat = line_flat(docs)
-        (flat.filter(F.length("line") >= LINE_MIN_CHARS)
-         .select("fp", "line", "doc_id").distinct()
-         .groupBy("fp", "line").agg(F.count("*").alias("n_docs"))
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(store_dir))
+            docs = docs.join(seen, "doc_id", "left_anti").localCheckpoint()
+        _write_batch(line_flat(docs)
+                     .filter(F.length("line") >= LINE_MIN_CHARS)
+                     .select("fp", "line", "doc_id").distinct()
+                     .groupBy("fp", "line")
+                     .agg(F.count("*").alias("n_docs")),
+                     batch_id, store_dir)
         if seen_dir is not None:
-            (docs.select("doc_id")
-             .withColumn("batch_id", F.lit(batch_id))
-             .write.mode("overwrite")
-             .options(partitionOverwriteMode="dynamic")
-             .partitionBy("batch_id").parquet(seen_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
+            _write_batch(docs.select("doc_id"), batch_id, seen_dir)
+        crash(batch_id, fail_after_write_for, "after write")
 
     return process
 
 
-def _line_df_folded(spark: SparkSession, store_dir: str) -> DataFrame | None:
-    s = _read_store(spark, store_dir)
-    if s is None:
-        return None
-    return (_effective_mg_summaries(s)
-            .groupBy("fp", "line").agg(F.sum("n_docs").alias("n_docs")))
+# line is functionally dependent on fp, so it rides the group key
+_LINE_DF_MERGE = (["fp", "line"], _sum_fold("n_docs"))
 
 
 def boilerplate_report_from_store(spark: SparkSession,
@@ -2487,7 +2206,7 @@ def boilerplate_report_from_store(spark: SparkSession,
         BOILER_DF,
     )
 
-    folded = _line_df_folded(spark, store_dir)
+    folded = _fold_store(spark, store_dir, *_LINE_DF_MERGE)
     if folded is None:
         return spark.createDataFrame([], "line string, n_docs long")
     return (folded.filter(F.col("n_docs") >= BOILER_DF)
@@ -2518,7 +2237,7 @@ def line_scrub_from_store(spark: SparkSession, docs: DataFrame,
         scrub_with_fps,
     )
 
-    folded = _line_df_folded(spark, store_dir)
+    folded = _fold_store(spark, store_dir, *_LINE_DF_MERGE)
     base = docs.select("doc_id", F.col("text").alias("orig_text"),
                        "text")
     if folded is None:
@@ -2566,9 +2285,8 @@ def compact_line_df_store(spark: SparkSession, store_dir: str,
     """Fold line-frequency partials into the watermark base (counts
     SUM; line is functionally dependent on fp, so it rides the group
     key)."""
-    return _compact_mergeable_store(
-        spark, store_dir, upto_batch_id, ["fp", "line"],
-        _sum_fold("n_docs"), files_per_partition)
+    return _compact_mergeable_store(spark, store_dir, upto_batch_id,
+                                    *_LINE_DF_MERGE, files_per_partition)
 
 
 def line_source_sink(store_dir: str,
@@ -2581,27 +2299,15 @@ def line_source_sink(store_dir: str,
     from cga_logs_to_kinesis_spark.operators.line_dedup import (
         line_flat,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
 
-    already_failed: set[int] = set()
+    return _partials_sink(
+        store_dir,
+        lambda b: (line_flat(b, "source").groupBy("source", "fp")
+                   .agg(F.count("*").alias("n_lines"))),
+        fail_after_write_for)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        flat = line_flat(batch_df, "source")
-        (flat.groupBy("source", "fp")
-         .agg(F.count("*").alias("n_lines"))
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(store_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
 
-    return process
+_LINE_SOURCE_MERGE = (["source", "fp"], _sum_fold("n_lines"))
 
 
 def boilerplate_ratio_from_store(spark: SparkSession,
@@ -2619,23 +2325,20 @@ def boilerplate_ratio_from_store(spark: SparkSession,
 
     schema = ("source string, n_lines long, n_boiler_lines long, "
               "boiler_ratio double")
-    s = _read_store(spark, source_store)
-    folded = _line_df_folded(spark, df_store)
-    if s is None or folded is None:
+    sf = _fold_store(spark, source_store, *_LINE_SOURCE_MERGE)
+    folded = _fold_store(spark, df_store, *_LINE_DF_MERGE)
+    if sf is None or folded is None:
         return spark.createDataFrame([], schema)
-    sf = (_effective_mg_summaries(s)
-          .groupBy("source", "fp").agg(F.sum("n_lines").alias("n")))
     boiler = (folded.filter(F.col("n_docs") >= BOILER_DF)
               .select("fp").withColumn("_b", F.lit(1)))
     marked = sf.join(boiler, "fp", "left")
+    n_boiler = F.sum(F.when(F.col("_b") == 1, F.col("n_lines"))
+                     .otherwise(F.lit(0)))
     return (marked.groupBy("source")
-            .agg(F.sum("n").alias("n_lines"),
-                 F.sum(F.when(F.col("_b") == 1, F.col("n"))
-                       .otherwise(F.lit(0))).alias("n_boiler_lines"),
-                 F.try_divide(
-                     F.sum(F.when(F.col("_b") == 1, F.col("n"))
-                           .otherwise(F.lit(0))).cast("double"),
-                     F.sum("n").cast("double"))
+            .agg(F.sum("n_lines").alias("n_lines"),
+                 n_boiler.alias("n_boiler_lines"),
+                 F.try_divide(n_boiler.cast("double"),
+                              F.sum("n_lines").cast("double"))
                  .alias("boiler_ratio"))
             .orderBy("source"))
 
@@ -2645,9 +2348,9 @@ def compact_line_source_store(spark: SparkSession, store_dir: str,
                               files_per_partition: int = 1) -> int:
     """Fold (source, fp) line-count partials into the watermark base
     (counts SUM)."""
-    return _compact_mergeable_store(
-        spark, store_dir, upto_batch_id, ["source", "fp"],
-        _sum_fold("n_lines"), files_per_partition)
+    return _compact_mergeable_store(spark, store_dir, upto_batch_id,
+                                    *_LINE_SOURCE_MERGE,
+                                    files_per_partition)
 
 
 # ---------------------------------------------------------------------------
@@ -2675,26 +2378,15 @@ def token_count_sink(store_dir: str,
     from cga_logs_to_kinesis_spark.operators.ingest_audit import (
         source_tokens,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
 
-    already_failed: set[int] = set()
+    return _partials_sink(
+        store_dir,
+        lambda b: (source_tokens(b).groupBy("source", "tok")
+                   .agg(F.count("*").alias("cnt"))),
+        fail_after_write_for)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        (source_tokens(batch_df)
-         .groupBy("source", "tok").agg(F.count("*").alias("cnt"))
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(store_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
 
-    return process
+_TOKEN_COUNT_MERGE = (["source", "tok"], _sum_fold("cnt"))
 
 
 def source_divergence_from_store(spark: SparkSession,
@@ -2707,14 +2399,12 @@ def source_divergence_from_store(spark: SparkSession,
         tv_from_token_counts,
     )
 
-    s = _read_store(spark, store_dir)
+    s = _fold_store(spark, store_dir, *_TOKEN_COUNT_MERGE)
     if s is None:
         return spark.createDataFrame(
             [], "source string, n_tokens long, n_distinct_tokens "
                 "long, tv_distance double")
-    live = _effective_mg_summaries(s)
-    per_src = (live.groupBy("source", "tok")
-               .agg(F.sum("cnt").alias("cnt_s"))
+    per_src = (s.withColumnRenamed("cnt", "cnt_s")
                .localCheckpoint())   # feeds corpus fold + TV join
     corpus = per_src.groupBy("tok").agg(
         F.sum("cnt_s").alias("cnt_all"))
@@ -2726,9 +2416,9 @@ def compact_token_count_store(spark: SparkSession, store_dir: str,
                               files_per_partition: int = 1) -> int:
     """Fold token-count partials into the watermark base (counts
     SUM)."""
-    return _compact_mergeable_store(
-        spark, store_dir, upto_batch_id, ["source", "tok"],
-        _sum_fold("cnt"), files_per_partition)
+    return _compact_mergeable_store(spark, store_dir, upto_batch_id,
+                                    *_TOKEN_COUNT_MERGE,
+                                    files_per_partition)
 
 
 def mixture_from_store(spark: SparkSession,
@@ -2752,13 +2442,12 @@ def mixture_from_store(spark: SparkSession,
         mixture_weight_columns,
     )
 
-    s = _read_store(spark, store_dir)
+    s = _fold_store(spark, store_dir, *_TOKEN_COUNT_MERGE)
     if s is None:
         return spark.createDataFrame(
             [], "source string, n_tokens long, weight double, "
                 "expected_epochs double")
-    per_src = (_effective_mg_summaries(s)
-               .groupBy("source").agg(F.sum("cnt").alias("n_tokens")))
+    per_src = s.groupBy("source").agg(F.sum("cnt").alias("n_tokens"))
     return mixture_weight_columns(per_src).orderBy("source")
 
 
@@ -2797,26 +2486,15 @@ def bigram_count_sink(store_dir: str,
     from cga_logs_to_kinesis_spark.operators.lm_quality import (
         doc_bigrams,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
 
-    already_failed: set[int] = set()
+    return _partials_sink(
+        store_dir,
+        lambda b: (doc_bigrams(b, checkpoint=False).groupBy("prev", "w")
+                   .agg(F.count("*").alias("cnt"))),
+        fail_after_write_for)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        (doc_bigrams(batch_df, checkpoint=False)
-         .groupBy("prev", "w").agg(F.count("*").alias("cnt"))
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(store_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
 
-    return process
+_BIGRAM_MERGE = (["prev", "w"], _sum_fold("cnt"))
 
 
 def perplexity_split_from_store(spark: SparkSession, docs: DataFrame,
@@ -2833,13 +2511,12 @@ def perplexity_split_from_store(spark: SparkSession, docs: DataFrame,
         surprisal_from_counts,
     )
 
-    s = _read_store(spark, store_dir)
+    s = _fold_store(spark, store_dir, *_BIGRAM_MERGE)
     if s is None:
         return spark.createDataFrame(
             [], "doc_id long, lang string, surprisal_score double, "
                 "bucket string, keep boolean")
-    freq2 = (_effective_mg_summaries(s)
-             .groupBy("prev", "w").agg(F.sum("cnt").alias("c_bg")))
+    freq2 = s.withColumnRenamed("cnt", "c_bg")
     # checkpoint=False: freq2 comes from the store, so the bigram
     # frame has exactly one consumer here — no reuse to materialize
     # for (same single-consumer usage as bigram_count_sink).
@@ -2854,9 +2531,8 @@ def compact_bigram_count_store(spark: SparkSession, store_dir: str,
                                files_per_partition: int = 1) -> int:
     """Fold bigram-count partials into the watermark base (counts
     SUM)."""
-    return _compact_mergeable_store(
-        spark, store_dir, upto_batch_id, ["prev", "w"],
-        _sum_fold("cnt"), files_per_partition)
+    return _compact_mergeable_store(spark, store_dir, upto_batch_id,
+                                    *_BIGRAM_MERGE, files_per_partition)
 
 
 # ---------------------------------------------------------------------------
@@ -2883,25 +2559,12 @@ def class_count_sink(store_dir: str,
     from cga_logs_to_kinesis_spark.operators.lm_quality import (
         _qclf_class_counts,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
 
-    already_failed: set[int] = set()
+    return _partials_sink(store_dir, _qclf_class_counts,
+                          fail_after_write_for)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        (_qclf_class_counts(batch_df)
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(store_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
 
-    return process
+_CLASS_COUNT_MERGE = (["bucket"], _sum_fold("n_pos", "n_neg"))
 
 
 def classifier_eval_from_store(spark: SparkSession, docs: DataFrame,
@@ -2918,15 +2581,11 @@ def classifier_eval_from_store(spark: SparkSession, docs: DataFrame,
         classifier_confusion,
     )
 
-    s = _read_store(spark, store_dir)
-    if s is None:
+    counts = _fold_store(spark, store_dir, *_CLASS_COUNT_MERGE)
+    if counts is None:
         return spark.createDataFrame(
             [], "is_target boolean, predicted boolean, n_docs long, "
                 "example_doc_id long, avg_score double")
-    counts = (_effective_mg_summaries(s)
-              .groupBy("bucket")
-              .agg(F.sum("n_pos").alias("n_pos"),
-                   F.sum("n_neg").alias("n_neg")))
     return classifier_confusion(_qclf_doc_buckets(docs), counts)
 
 
@@ -2935,9 +2594,9 @@ def compact_class_count_store(spark: SparkSession, store_dir: str,
                               files_per_partition: int = 1) -> int:
     """Fold class-count partials into the watermark base (counts
     SUM)."""
-    return _compact_mergeable_store(
-        spark, store_dir, upto_batch_id, ["bucket"],
-        _sum_fold("n_pos", "n_neg"), files_per_partition)
+    return _compact_mergeable_store(spark, store_dir, upto_batch_id,
+                                    *_CLASS_COUNT_MERGE,
+                                    files_per_partition)
 
 
 # ---------------------------------------------------------------------------
@@ -2975,25 +2634,11 @@ def bpe_vocab_sink(freq_dir: str,
     is the batch fit's exact front (``word_freqs``) — one partial-agg
     groupBy to the batch's distinct words."""
     from cga_logs_to_kinesis_spark.operators.bpe import word_freqs
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
 
-    already_failed: set[int] = set()
+    return _partials_sink(freq_dir, word_freqs, fail_after_write_for)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        (word_freqs(batch_df)
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(freq_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
 
-    return process
+_BPE_FREQ_MERGE = (["w"], _sum_fold("freq"))
 
 
 def _bpe_current_fit(model_dir: str) -> str | None:
@@ -3039,12 +2684,10 @@ def fit_bpe_store(spark: SparkSession, freq_dir: str, model_dir: str,
 
     if n_merges is None:
         n_merges = BPE_N_MERGES
-    s = _read_store(spark, freq_dir)
-    if s is None:
+    wf = _fold_store(spark, freq_dir, *_BPE_FREQ_MERGE)
+    if wf is None:
         return 0
-    wf = (_effective_mg_summaries(s)
-          .groupBy("w").agg(F.sum("freq").alias("freq"))
-          .localCheckpoint())      # two consumers: loop + vocab keys
+    wf = wf.localCheckpoint()      # two consumers: loop + vocab keys
     merges_df = learn_bpe_merges_from_freqs(spark, wf, n_merges)
     # n_merges rows by construction — the bounded-collect class.
     merges = [(r.lhs, r.rhs)
@@ -3111,9 +2754,8 @@ def compact_bpe_freq_store(spark: SparkSession, freq_dir: str,
                            files_per_partition: int = 1) -> int:
     """Fold word-frequency partials into the watermark base (counts
     SUM)."""
-    return _compact_mergeable_store(
-        spark, freq_dir, upto_batch_id, ["w"],
-        _sum_fold("freq"), files_per_partition)
+    return _compact_mergeable_store(spark, freq_dir, upto_batch_id,
+                                    *_BPE_FREQ_MERGE, files_per_partition)
 
 
 # ---------------------------------------------------------------------------
@@ -3140,31 +2782,19 @@ def novelty_sink(fp_dir: str, doc_dir: str,
     from cga_logs_to_kinesis_spark.operators.dedup import (
         char_shingle_docs,
     )
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
 
-    already_failed: set[int] = set()
+    crash = _crash_once()
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         sh = char_shingle_docs(batch_df).localCheckpoint()
         pairs = sh.select("doc_id", F.explode("shingles").alias("fp"))
-        conf = {"partitionOverwriteMode": "dynamic"}
-        (pairs.groupBy("fp")
-         .agg(F.min("doc_id").alias("first_doc"))
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(fp_dir))
-        (sh.select("doc_id", F.size("shingles").cast("long")
-                   .alias("n_ngrams"))
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite").options(**conf)
-         .partitionBy("batch_id").parquet(doc_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
+        _write_batch(pairs.groupBy("fp")
+                     .agg(F.min("doc_id").alias("first_doc")),
+                     batch_id, fp_dir)
+        _write_batch(sh.select("doc_id", F.size("shingles").cast("long")
+                               .alias("n_ngrams")),
+                     batch_id, doc_dir)
+        crash(batch_id, fail_after_write_for, "after write")
 
     return process
 
@@ -3177,9 +2807,6 @@ def compact_novelty_store(spark: SparkSession, fp_dir: str,
     MIN idempotence makes the plain distinct-store base discipline
     sufficient: a crash between base write and cleanup leaves
     duplicate (fp, first_doc) rows that cannot move any folded MIN."""
-    import os
-    import shutil
-
     df = _read_store(spark, fp_dir)
     if df is None:
         return 0
@@ -3193,17 +2820,10 @@ def compact_novelty_store(spark: SparkSession, fp_dir: str,
     base = (to_fold.groupBy("fp")
             .agg(F.min("first_doc").alias("first_doc"))
             .coalesce(files_per_partition)
-            .withColumn("batch_id", F.lit(-1))
             .localCheckpoint())          # self-read: old base is input
-    (base.write.mode("overwrite")
-     .options(partitionOverwriteMode="dynamic")
-     .partitionBy("batch_id").parquet(fp_dir))
-    for name in os.listdir(fp_dir):
-        if not name.startswith("batch_id="):
-            continue
-        bid = int(name.split("=", 1)[1])
-        if bid != -1 and bid <= upto_batch_id:
-            shutil.rmtree(os.path.join(fp_dir, name))
+    _write_batch(base, -1, fp_dir)
+    _drop_batches(fp_dir, [b for b in _batch_ids(fp_dir)
+                           if b != -1 and b <= upto_batch_id])
     return n_folded
 
 
@@ -3532,27 +3152,17 @@ def hll_distinct_sink(store_dir: str, key_col: str = "lang",
     """foreachBatch sink: per-batch per-key HLL sketches of
     ``value_col``, appended batch_id-keyed.  State per (batch, key)
     is one ~2^lg_k-register binary — independent of batch size."""
-    from cga_logs_to_kinesis_spark.streaming.sink import (
-        FatalDeliveryError,
-    )
+    return _partials_sink(
+        store_dir,
+        lambda b: (b.filter(F.col(key_col).isNotNull()).groupBy(key_col)
+                   .agg(F.hll_sketch_agg(value_col, F.lit(lg_k))
+                        .alias("sk"))),
+        fail_after_write_for)
 
-    already_failed: set[int] = set()
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_df.filter(F.col(key_col).isNotNull())
-         .groupBy(key_col)
-         .agg(F.hll_sketch_agg(value_col, F.lit(lg_k)).alias("sk"))
-         .withColumn("batch_id", F.lit(batch_id))
-         .write.mode("overwrite")
-         .options(partitionOverwriteMode="dynamic")
-         .partitionBy("batch_id").parquet(store_dir))
-        if (batch_id in fail_after_write_for
-                and batch_id not in already_failed):
-            already_failed.add(batch_id)
-            raise FatalDeliveryError(
-                f"injected crash after write, batch {batch_id}")
-
-    return process
+def _hll_union_fold(g):
+    """HLL union is register-wise MAX: idempotent and commutative."""
+    return g.agg(F.hll_union_agg("sk").alias("sk"))
 
 
 def approx_distinct_from_store(spark: SparkSession, store_dir: str,
@@ -3561,14 +3171,12 @@ def approx_distinct_from_store(spark: SparkSession, store_dir: str,
     (union then estimate) — equal to the single-shot batch sketch
     over the same rows because Spark's partial aggregation is itself
     union-of-partials."""
-    s = _read_store(spark, store_dir)
+    s = _fold_store(spark, store_dir, [key_col], _hll_union_fold)
     if s is None:
         return spark.createDataFrame(
             [], f"{key_col} string, approx_distinct long")
-    return (_effective_mg_summaries(s)
-            .groupBy(key_col)
-            .agg(F.hll_sketch_estimate(F.hll_union_agg("sk"))
-                 .alias("approx_distinct"))
+    return (s.select(key_col, F.hll_sketch_estimate("sk")
+                     .alias("approx_distinct"))
             .orderBy(key_col))
 
 
@@ -3578,9 +3186,6 @@ def compact_hll_store(spark: SparkSession, store_dir: str,
     """Fold sketch partials into the watermark base — HLL union is
     register-wise MAX (idempotent + commutative), so the shared
     mergeable compactor applies with the union as the merge."""
-    def fold(g):
-        return g.agg(F.hll_union_agg("sk").alias("sk"))
-
-    return _compact_mergeable_store(
-        spark, store_dir, upto_batch_id, [key_col], fold,
-        files_per_partition)
+    return _compact_mergeable_store(spark, store_dir, upto_batch_id,
+                                    [key_col], _hll_union_fold,
+                                    files_per_partition)

@@ -37,7 +37,7 @@ from __future__ import annotations
 
 import time
 from collections.abc import Iterator
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -173,20 +173,13 @@ class DeliveryStats:
     records_dropped: int = 0
     request_errors: int = 0
     batches: int = 0
-    history: list[dict] = field(default_factory=list)
 
     def update(self, batch_rows: list[dict]) -> None:
         self.batches += 1
-        snap = {"records_sent": 0, "records_dropped": 0,
-                "request_errors": 0}
         for r in batch_rows:
-            snap["records_sent"] += r["records_sent"]
-            snap["records_dropped"] += r["records_dropped"]
-            snap["request_errors"] += r["request_errors"]
-        self.records_sent += snap["records_sent"]
-        self.records_dropped += snap["records_dropped"]
-        self.request_errors += snap["request_errors"]
-        self.history.append(snap)
+            self.records_sent += r["records_sent"]
+            self.records_dropped += r["records_dropped"]
+            self.request_errors += r["request_errors"]
 
 
 def deliver_pages(df: DataFrame, transport: Transport,
@@ -306,49 +299,6 @@ def foreach_batch_sink(transport: Transport, config: SinkConfig,
         stats.update(pdf.to_dict("records"))
 
     return process
-
-
-def firehose_boto3_transport(stream_region: str) -> Transport:
-    """Real Firehose ``PutRecordBatch`` transport, boto3-gated — the
-    K5 sink (reference firehose.go:78-90, the vendored client's
-    delivery-stream half).  Firehose records are Data-only (no
-    partition key — the delivery stream owns placement), and the
-    response reports FailedPutCount + per-record ErrorCode in
-    RequestResponses; both map directly onto the Transport contract
-    (failed indices), so ``deliver_pages``' page-cut/retry/backoff/
-    drop machinery is reused unchanged.  The 500-record page cap is
-    the same limit PutRecordBatch imposes."""
-    try:
-        import boto3  # noqa: F401
-    except ImportError as e:  # pragma: no cover
-        raise NotImplementedError(
-            "boto3 not available; use FirehoseFakeTransport "
-            "(streaming/faults.py) for local delivery") from e
-
-    class FirehoseBoto3Transport(Transport):  # pragma: no cover
-        def __init__(self, region: str):
-            self.region = region
-            self._client = None
-
-        def client(self):
-            import boto3
-            if self._client is None:
-                self._client = boto3.client("firehose",
-                                            region_name=self.region)
-            return self._client
-
-        def send(self, stream, page):
-            resp = self.client().put_record_batch(
-                DeliveryStreamName=stream,
-                Records=[{"Data": d} for d, _k in page])
-            failed = [i for i, r in enumerate(resp["RequestResponses"])
-                      if "ErrorCode" in r]
-            # the API's own failure count must agree with the
-            # per-record verdicts we return
-            assert resp.get("FailedPutCount", len(failed)) == len(failed)
-            return failed
-
-    return FirehoseBoto3Transport(stream_region)
 
 
 def build_api_request(*, target: str, body_obj: dict,

@@ -119,10 +119,12 @@ def test_too_few_recovered_pairs_rejected(tmp_path):
     assert previous_round_bench(tmp, 0.1) is None
 
 
-def test_real_r13_driver_record_recovers():
+def test_real_r13_driver_record_recovers(tmp_path):
     """The actual shipped BENCH_r13.json (parsed: null) must recover
     enough timings to anchor r14's deltas; spot-check a value against
     the committed builder record."""
+    import shutil
+
     with open("/root/repo/BENCH_r13.json") as f:
         rec = json.load(f)
     assert rec["parsed"] is None  # the condition this fix exists for
@@ -131,16 +133,18 @@ def test_real_r13_driver_record_recovers():
     assert got["queries"]["pagerank_docs"] == 2.483
     assert "minhash_lsh" not in got["queries"]
     # ... but the full chain prefers the complete builder records of
-    # the NEWEST recorded round (r13 when this test was written; the
-    # current round once its final runs are committed)
-    import glob
-    import re
-
-    newest = max(int(re.search(r"r(\d+)_final_run", p).group(1))
-                 for p in glob.glob(
-                     "/root/repo/docs/bench/r*_final_run*.json"))
-    prev = previous_round_bench("/root/repo", 0.1)
-    assert prev["base"].startswith(f"r{newest}:min(")
+    # the newest round over that round's truncated driver record (and
+    # over any older round).  Built under tmp_path, so the check does
+    # not depend on which bench records happen to be committed.
+    tmp = str(tmp_path)
+    shutil.copy(os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "BENCH_r13.json"), tmp)
+    _driver_parsed(tmp, 12, {"pagerank_docs": 9.0})
+    _builder(tmp, 13, 1, {"pagerank_docs": 2.6, "q2": 1.0})
+    _builder(tmp, 13, 2, {"pagerank_docs": 2.5, "q2": 1.2})
+    prev = previous_round_bench(tmp, 0.1)
+    assert prev["base"] == "r13:min(2runs)"
+    assert prev["queries"] == {"pagerank_docs": 2.5, "q2": 1.0}
 
 
 # ---------------------------------------------------------------------------

@@ -16,6 +16,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from cga_logs_to_kinesis_spark.streaming import corpus
+
 
 def _max_stage_id(spark) -> int:
     """Highest stage id currently retained — the starting cursor."""
@@ -278,28 +280,6 @@ def test_minhash_sink_work_grows_linearly_not_quadratically(
 HH_BATCHES = 12
 
 
-def test_heavy_hitters_sink_work_is_flat(spark, tmp_path):
-    """The MG summary sink tokenizes ONLY its own batch (O(K) state
-    per partition, no store read): per-batch work must not grow as
-    the summary store accumulates versions."""
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        heavy_hitters_sink,
-    )
-
-    sink = heavy_hitters_sink(str(tmp_path / "mg"))
-    work = []
-    cursor = _max_stage_id(spark)
-    for k in range(HH_BATCHES):
-        sink(_dup_doc_batch(spark, k), k)
-        delta, cursor = _work_since(spark, cursor)
-        work.append(delta)
-    early = sum(work[1:5]) / 4
-    late = sum(work[8:12]) / 4
-    assert late <= 3.0 * early, (
-        f"per-batch MG work grew with store history: early={early:.0f} "
-        f"late={late:.0f} records/batch")
-
-
 def _lineitem_batch(spark, k: int, n=1000):
     """Deterministic lineitem-shaped batch over FIXED value universes
     (so the distinct-value store saturates)."""
@@ -321,27 +301,6 @@ def _lineitem_batch(spark, k: int, n=1000):
         .alias("l_shipdate"))
 
 
-def test_table_profile_sink_work_is_flat(spark, tmp_path):
-    """The profile sink folds partials + distinct values of ITS OWN
-    batch only — per-batch work flat regardless of store size."""
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        table_profile_sink,
-    )
-
-    sink = table_profile_sink(str(tmp_path / "p"), str(tmp_path / "v"))
-    work = []
-    cursor = _max_stage_id(spark)
-    for k in range(HH_BATCHES):
-        sink(_lineitem_batch(spark, k), k)
-        delta, cursor = _work_since(spark, cursor)
-        work.append(delta)
-    early = sum(work[1:5]) / 4
-    late = sum(work[8:12]) / 4
-    assert late <= 3.0 * early, (
-        f"per-batch profile work grew: early={early:.0f} "
-        f"late={late:.0f} records/batch")
-
-
 def _audit_batch(spark, k: int, n=800):
     h = F.abs(F.xxhash64(F.lit(k), "id"))
     text = F.concat(F.lit("body "), (h % 2000).cast("string"))
@@ -356,52 +315,171 @@ def _audit_batch(spark, k: int, n=800):
         (h % 4).alias("shard"))
 
 
-def test_ingest_audit_sink_work_is_flat(spark, tmp_path):
-    """The audit sink folds per-shard partials of its own batch only
-    (no cross-batch read at all) — strictly flat."""
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        ingest_audit_sink,
-    )
-
-    sink = ingest_audit_sink(str(tmp_path / "audit"))
-    work = []
-    cursor = _max_stage_id(spark)
-    for k in range(HH_BATCHES):
-        sink(_audit_batch(spark, k), k)
-        delta, cursor = _work_since(spark, cursor)
-        work.append(delta)
-    early = sum(work[1:5]) / 4
-    late = sum(work[8:12]) / 4
-    assert late <= 3.0 * early, (
-        f"per-batch audit work grew: early={early:.0f} "
-        f"late={late:.0f} records/batch")
+FOOTER = "\nshared footer line for every document"
 
 
-def test_bloom_positions_sink_work_is_flat(spark, tmp_path):
-    """The blocklist sink fingerprints its own batch and writes
-    distinct positions (<= BLOOM_BITS rows) — strictly flat, and the
-    store is structurally bounded."""
+def _sourced_batch(spark, k: int):
+    return _dup_doc_batch(spark, k).withColumn(
+        "source", (F.col("doc_id") % 4).cast("string"))
+
+
+def _drift_batch(spark, k: int):
+    return _sourced_batch(spark, k).withColumn(
+        "lang", (F.col("doc_id") % 3).cast("string"))
+
+
+def _footer_batch(spark, k: int):
+    return _dup_doc_batch(spark, k).withColumn(
+        "text", F.concat("text", F.lit(FOOTER)))
+
+
+def _sourced_footer_batch(spark, k: int):
+    return _sourced_batch(spark, k).withColumn(
+        "text", F.concat("text", F.lit(FOOTER)))
+
+
+def _skew_batch(spark, k: int):
+    return (_dup_doc_batch(spark, k)
+            .select(F.lit("token").alias("key_col"),
+                    F.col("text").alias("k")))
+
+
+def _class_batch(spark, k: int):
+    return _dup_doc_batch(spark, k).withColumn(
+        "lang", F.when(F.col("doc_id") % 3 == 0, "en").otherwise("xx"))
+
+
+def _ivf_sink(spark, d):
+    cents = (_vec_batch(spark, 999).limit(8)
+             .select(F.col("vec_id").alias("centroid_id"),
+                     F.col("embedding").alias("cent"))
+             .localCheckpoint())
+    return corpus.ivf_index_sink(d("assign"), d("codes"), d("vecs"), cents)
+
+
+def _ivf_index_grew_linearly(spark, d):
+    """One assignment and one SQ8 code per vector ever written."""
+    n = HH_BATCHES * VECS_PER_BATCH
+    assert spark.read.parquet(d("assign")).count() == n
+    assert spark.read.parquet(d("codes")).count() == n
+
+
+def _bloom_store_bounded(spark, d):
+    """At most BLOOM_BITS distinct positions per batch partition."""
     from cga_logs_to_kinesis_spark.operators.sketches import BLOOM_BITS
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        bloom_positions_sink,
-    )
 
-    store = str(tmp_path / "bloom")
-    sink = bloom_positions_sink(store)
-    work = []
-    cursor = _max_stage_id(spark)
-    for k in range(HH_BATCHES):
-        sink(_dup_doc_batch(spark, k), k)
-        delta, cursor = _work_since(spark, cursor)
-        work.append(delta)
-    early = sum(work[1:5]) / 4
-    late = sum(work[8:12]) / 4
-    assert late <= 3.0 * early, (
-        f"per-batch bloom work grew: early={early:.0f} "
-        f"late={late:.0f} records/batch")
-    per_batch = (spark.read.parquet(store)
+    per_batch = (spark.read.parquet(d("bloom"))
                  .groupBy("batch_id").count().collect())
     assert all(r["count"] <= BLOOM_BITS for r in per_batch)
+
+
+def _class_store_bounded(spark, d):
+    """At most B hashed-bucket rows per batch partition."""
+    import glob
+
+    from cga_logs_to_kinesis_spark.operators.lm_quality import (
+        QCLF_BUCKETS,
+    )
+    for part in glob.glob(d("class_counts") + "/batch_id=*"):
+        assert spark.read.parquet(part).count() <= QCLF_BUCKETS
+
+
+# Families whose sink folds ITS OWN batch only (no cross-batch read):
+# per-batch work must stay strictly flat while the store grows
+# underneath.  name -> (sink(spark, d), batch(spark, k), extra check
+# or None), where d(sub) is a path under the test's tmp dir.
+FLAT_ENVELOPES = {
+    "heavy_hitters": (
+        lambda spark, d: corpus.heavy_hitters_sink(d("mg")),
+        _dup_doc_batch, None),
+    "table_profile": (
+        lambda spark, d: corpus.table_profile_sink(d("p"), d("v")),
+        _lineitem_batch, None),
+    "ingest_audit": (
+        lambda spark, d: corpus.ingest_audit_sink(d("audit")),
+        _audit_batch, None),
+    "bloom_positions": (
+        lambda spark, d: corpus.bloom_positions_sink(d("bloom")),
+        _dup_doc_batch, _bloom_store_bounded),
+    "ivf": (_ivf_sink, _vec_batch, _ivf_index_grew_linearly),
+    "encoding_anomaly": (
+        lambda spark, d: corpus.encoding_anomaly_sink(d("enc")),
+        _sourced_batch, None),
+    "novelty": (
+        lambda spark, d: corpus.novelty_sink(d("fps"), d("docs")),
+        _dup_doc_batch, None),
+    "script_mixing": (
+        lambda spark, d: corpus.script_mixing_sink(d("scripts")),
+        _sourced_batch, None),
+    "skew_freq": (
+        lambda spark, d: corpus.skew_freq_sink(d("freqs")),
+        _skew_batch, None),
+    "corpus_drift": (
+        lambda spark, d: corpus.corpus_drift_sink(
+            d("sums"), d("vals"), max_doc_id=HH_BATCHES * 1000),
+        _drift_batch, None),
+    "line_df": (
+        lambda spark, d: corpus.line_df_sink(d("line_df")),
+        _footer_batch, None),
+    "line_source": (
+        lambda spark, d: corpus.line_source_sink(d("line_src")),
+        _sourced_footer_batch, None),
+    "token_count": (
+        lambda spark, d: corpus.token_count_sink(d("tok_counts")),
+        _sourced_batch, None),
+    "hll": (
+        lambda spark, d: corpus.hll_distinct_sink(d("hll"),
+                                                  key_col="source"),
+        _sourced_batch, None),
+    "bigram_count": (
+        lambda spark, d: corpus.bigram_count_sink(d("bigram_counts")),
+        _dup_doc_batch, None),
+    "class_count": (
+        lambda spark, d: corpus.class_count_sink(d("class_counts")),
+        _class_batch, _class_store_bounded),
+    "bpe_vocab": (
+        lambda spark, d: corpus.bpe_vocab_sink(d("word_freqs")),
+        _dup_doc_batch, None),
+}
+
+
+def _assert_work_is_flat(spark, tmp_path, name: str) -> None:
+    make_sink, batch, check = FLAT_ENVELOPES[name]
+
+    def d(sub: str) -> str:
+        return str(tmp_path / sub)
+
+    sink = make_sink(spark, d)
+    work = []
+    cursor = _max_stage_id(spark)
+    for k in range(HH_BATCHES):
+        sink(batch(spark, k), k)
+        delta, cursor = _work_since(spark, cursor)
+        work.append(delta)
+    early = sum(work[1:5]) / 4
+    late = sum(work[8:12]) / 4
+    assert late <= 3.0 * early, (
+        f"per-batch {name} work grew with store history: "
+        f"early={early:.0f} late={late:.0f} records/batch")
+    if check is not None:
+        check(spark, d)
+
+
+def _flat_envelope_test(name: str):
+    def test(spark, tmp_path):
+        _assert_work_is_flat(spark, tmp_path, name)
+
+    test.__name__ = test.__qualname__ = f"test_{name}_sink_work_is_flat"
+    test.__doc__ = (f"The {name} sink's per-batch work stays flat as "
+                    "its store grows (FLAT_ENVELOPES).")
+    return test
+
+
+# One test per table row, named as before the table existed so each
+# family's envelope keeps its own stable test id.
+for _name in FLAT_ENVELOPES:
+    globals()[f"test_{_name}_sink_work_is_flat"] = _flat_envelope_test(
+        _name)
 
 
 FUNNEL_USERS = 400
@@ -458,256 +536,6 @@ def test_funnel_sink_work_is_flat_once_users_saturate(spark, tmp_path):
     assert n_state <= FUNNEL_USERS * 3
 
 
-def test_ivf_sink_work_is_flat(spark, tmp_path):
-    """The IVF index sink assigns/encodes ONLY its own batch against
-    the fixed centroids (reads nothing) — strictly flat while the
-    persisted index grows linearly underneath."""
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        ivf_index_sink,
-    )
-
-    cents = (_vec_batch(spark, 999).limit(8)
-             .select(F.col("vec_id").alias("centroid_id"),
-                     F.col("embedding").alias("cent"))
-             .localCheckpoint())
-    dirs = [str(tmp_path / d) for d in ("assign", "codes", "vecs")]
-    sink = ivf_index_sink(*dirs, cents)
-    work = []
-    cursor = _max_stage_id(spark)
-    for k in range(HH_BATCHES):
-        sink(_vec_batch(spark, k), k)
-        delta, cursor = _work_since(spark, cursor)
-        work.append(delta)
-    early = sum(work[1:5]) / 4
-    late = sum(work[8:12]) / 4
-    assert late <= 3.0 * early, (
-        f"per-batch IVF index work grew with index size: "
-        f"early={early:.0f} late={late:.0f} records/batch")
-    # the index grew linearly underneath: one assignment per vector
-    n = HH_BATCHES * VECS_PER_BATCH
-    assert spark.read.parquet(dirs[0]).count() == n
-    assert spark.read.parquet(dirs[1]).count() == n
-
-
-def test_encoding_anomaly_sink_work_is_flat(spark, tmp_path):
-    """The encoding-audit sink folds its own batch only (no
-    cross-batch read) — strictly flat per-batch work."""
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        encoding_anomaly_sink,
-    )
-
-    sink = encoding_anomaly_sink(str(tmp_path / "enc"))
-    work = []
-    cursor = _max_stage_id(spark)
-    for k in range(HH_BATCHES):
-        batch = _dup_doc_batch(spark, k).withColumn(
-            "source", (F.col("doc_id") % 4).cast("string"))
-        sink(batch, k)
-        delta, cursor = _work_since(spark, cursor)
-        work.append(delta)
-    early = sum(work[1:5]) / 4
-    late = sum(work[8:12]) / 4
-    assert late <= 3.0 * early, (
-        f"per-batch encoding-audit work grew: early={early:.0f} "
-        f"late={late:.0f} records/batch")
-
-
-def test_novelty_sink_work_is_flat(spark, tmp_path):
-    """The novelty sink shingles ONLY its own batch and writes
-    min-per-fp partials (no cross-batch read) — strictly flat,
-    while the fp store grows linearly underneath."""
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        novelty_sink,
-    )
-
-    sink = novelty_sink(str(tmp_path / "fps"), str(tmp_path / "docs"))
-    work = []
-    cursor = _max_stage_id(spark)
-    for k in range(HH_BATCHES):
-        sink(_dup_doc_batch(spark, k), k)
-        delta, cursor = _work_since(spark, cursor)
-        work.append(delta)
-    early = sum(work[1:5]) / 4
-    late = sum(work[8:12]) / 4
-    assert late <= 3.0 * early, (
-        f"per-batch novelty work grew: early={early:.0f} "
-        f"late={late:.0f} records/batch")
-
-
-def test_script_mixing_sink_work_is_flat(spark, tmp_path):
-    """The script-mixing sink folds its own batch only (no
-    cross-batch read) — strictly flat per-batch work."""
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        script_mixing_sink,
-    )
-
-    sink = script_mixing_sink(str(tmp_path / "scripts"))
-    work = []
-    cursor = _max_stage_id(spark)
-    for k in range(HH_BATCHES):
-        batch = _dup_doc_batch(spark, k).withColumn(
-            "source", (F.col("doc_id") % 4).cast("string"))
-        sink(batch, k)
-        delta, cursor = _work_since(spark, cursor)
-        work.append(delta)
-    early = sum(work[1:5]) / 4
-    late = sum(work[8:12]) / 4
-    assert late <= 3.0 * early, (
-        f"per-batch script-mixing work grew: early={early:.0f} "
-        f"late={late:.0f} records/batch")
-
-
-def test_skew_freq_sink_work_is_flat(spark, tmp_path):
-    """The skew monitor folds its own batch's (key_col, k) projection
-    only (no cross-batch read) — strictly flat per-batch work while
-    the frequency store grows underneath."""
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        skew_freq_sink,
-    )
-
-    sink = skew_freq_sink(str(tmp_path / "freqs"))
-    work = []
-    cursor = _max_stage_id(spark)
-    for k in range(HH_BATCHES):
-        batch = (_dup_doc_batch(spark, k)
-                 .select(F.lit("token").alias("key_col"),
-                         F.col("text").alias("k")))
-        sink(batch, k)
-        delta, cursor = _work_since(spark, cursor)
-        work.append(delta)
-    early = sum(work[1:5]) / 4
-    late = sum(work[8:12]) / 4
-    assert late <= 3.0 * early, (
-        f"per-batch skew-monitor work grew: early={early:.0f} "
-        f"late={late:.0f} records/batch")
-
-
-def test_corpus_drift_sink_work_is_flat(spark, tmp_path):
-    """The drift monitor folds its own batch only (no cross-batch
-    read): per-batch work stays flat while the sum store grows one
-    10-row partition set per batch underneath."""
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        corpus_drift_sink,
-    )
-
-    sink = corpus_drift_sink(str(tmp_path / "sums"),
-                             str(tmp_path / "vals"),
-                             max_doc_id=HH_BATCHES * 1000)
-    work = []
-    cursor = _max_stage_id(spark)
-    for k in range(HH_BATCHES):
-        batch = _dup_doc_batch(spark, k).withColumn(
-            "source", (F.col("doc_id") % 4).cast("string")) \
-            .withColumn("lang", (F.col("doc_id") % 3).cast("string"))
-        sink(batch, k)
-        delta, cursor = _work_since(spark, cursor)
-        work.append(delta)
-    early = sum(work[1:5]) / 4
-    late = sum(work[8:12]) / 4
-    assert late <= 3.0 * early, (
-        f"per-batch drift-monitor work grew: early={early:.0f} "
-        f"late={late:.0f} records/batch")
-
-
-def test_line_df_sink_work_is_flat(spark, tmp_path):
-    """The line-frequency miner folds its own batch only (no
-    cross-batch read) — strictly flat per-batch work while the
-    blocklist store grows underneath."""
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        line_df_sink,
-    )
-
-    sink = line_df_sink(str(tmp_path / "line_df"))
-    work = []
-    cursor = _max_stage_id(spark)
-    for k in range(HH_BATCHES):
-        batch = _dup_doc_batch(spark, k).withColumn(
-            "text", F.concat("text", F.lit("\nshared footer line "
-                                           "for every document")))
-        sink(batch, k)
-        delta, cursor = _work_since(spark, cursor)
-        work.append(delta)
-    early = sum(work[1:5]) / 4
-    late = sum(work[8:12]) / 4
-    assert late <= 3.0 * early, (
-        f"per-batch line-df work grew: early={early:.0f} "
-        f"late={late:.0f} records/batch")
-
-
-def test_line_source_sink_work_is_flat(spark, tmp_path):
-    """The ratio gate's (source, fp) counter folds its own batch only
-    — strictly flat per-batch work."""
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        line_source_sink,
-    )
-
-    sink = line_source_sink(str(tmp_path / "line_src"))
-    work = []
-    cursor = _max_stage_id(spark)
-    for k in range(HH_BATCHES):
-        batch = _dup_doc_batch(spark, k).withColumn(
-            "source", (F.col("doc_id") % 4).cast("string")) \
-            .withColumn("text",
-                        F.concat("text", F.lit("\nshared footer line "
-                                               "for every document")))
-        sink(batch, k)
-        delta, cursor = _work_since(spark, cursor)
-        work.append(delta)
-    early = sum(work[1:5]) / 4
-    late = sum(work[8:12]) / 4
-    assert late <= 3.0 * early, (
-        f"per-batch line-source work grew: early={early:.0f} "
-        f"late={late:.0f} records/batch")
-
-
-def test_token_count_sink_work_is_flat(spark, tmp_path):
-    """The divergence monitor's token counter folds its own batch
-    only — strictly flat per-batch work while the vocabulary store
-    grows underneath."""
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        token_count_sink,
-    )
-
-    sink = token_count_sink(str(tmp_path / "tok_counts"))
-    work = []
-    cursor = _max_stage_id(spark)
-    for k in range(HH_BATCHES):
-        batch = _dup_doc_batch(spark, k).withColumn(
-            "source", (F.col("doc_id") % 4).cast("string"))
-        sink(batch, k)
-        delta, cursor = _work_since(spark, cursor)
-        work.append(delta)
-    early = sum(work[1:5]) / 4
-    late = sum(work[8:12]) / 4
-    assert late <= 3.0 * early, (
-        f"per-batch token-count work grew: early={early:.0f} "
-        f"late={late:.0f} records/batch")
-
-
-def test_hll_sink_work_is_flat(spark, tmp_path):
-    """The sketch sink folds its own batch only; per-(batch, key)
-    state is a fixed-register binary — strictly flat per-batch
-    work AND constant per-batch store growth."""
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        hll_distinct_sink,
-    )
-
-    sink = hll_distinct_sink(str(tmp_path / "hll"), key_col="source")
-    work = []
-    cursor = _max_stage_id(spark)
-    for k in range(HH_BATCHES):
-        batch = _dup_doc_batch(spark, k).withColumn(
-            "source", (F.col("doc_id") % 4).cast("string"))
-        sink(batch, k)
-        delta, cursor = _work_since(spark, cursor)
-        work.append(delta)
-    early = sum(work[1:5]) / 4
-    late = sum(work[8:12]) / 4
-    assert late <= 3.0 * early, (
-        f"per-batch HLL work grew: early={early:.0f} "
-        f"late={late:.0f} records/batch")
-
-
 def test_setjoin_index_sink_work_grows_linearly_not_quadratically(
         spark, tmp_path):
     """20 crawl drops through the EXACT prefix-index sink.  Per-batch
@@ -749,86 +577,6 @@ def test_setjoin_index_sink_work_grows_linearly_not_quadratically(
         F.size("fps").alias("n")).agg(
         F.sum(F.expr("n - ((n + 1) div 2) + 1"))).collect()[0][0]
     assert idx_rows == sizes
-
-
-def test_bigram_count_sink_work_is_flat(spark, tmp_path):
-    """The bigram-LM counter folds its own batch only — strictly flat
-    per-batch work while the bigram-vocabulary store grows
-    underneath (the token-count envelope, one n-gram order up)."""
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        bigram_count_sink,
-    )
-
-    sink = bigram_count_sink(str(tmp_path / "bigram_counts"))
-    work = []
-    cursor = _max_stage_id(spark)
-    for k in range(HH_BATCHES):
-        sink(_dup_doc_batch(spark, k), k)
-        delta, cursor = _work_since(spark, cursor)
-        work.append(delta)
-    early = sum(work[1:5]) / 4
-    late = sum(work[8:12]) / 4
-    assert late <= 3.0 * early, (
-        f"per-batch bigram-count work grew: early={early:.0f} "
-        f"late={late:.0f} records/batch")
-
-
-def test_class_count_sink_work_is_flat(spark, tmp_path):
-    """The probe trainer folds its own batch only — flat per-batch
-    work AND bounded state (B hashed buckets per batch, the hashing
-    trick's whole point)."""
-    import glob
-
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        class_count_sink,
-    )
-
-    store = str(tmp_path / "class_counts")
-    sink = class_count_sink(store)
-    work = []
-    cursor = _max_stage_id(spark)
-    for k in range(HH_BATCHES):
-        batch = _dup_doc_batch(spark, k).withColumn(
-            "lang", F.when(F.col("doc_id") % 3 == 0, "en")
-            .otherwise("xx"))
-        sink(batch, k)
-        delta, cursor = _work_since(spark, cursor)
-        work.append(delta)
-    early = sum(work[1:5]) / 4
-    late = sum(work[8:12]) / 4
-    assert late <= 3.0 * early, (
-        f"per-batch class-count work grew: early={early:.0f} "
-        f"late={late:.0f} records/batch")
-    # bounded state: every batch partition holds at most B rows
-    from cga_logs_to_kinesis_spark.operators.lm_quality import (
-        QCLF_BUCKETS,
-    )
-    for d in glob.glob(store + "/batch_id=*"):
-        assert spark.read.parquet(d).count() <= QCLF_BUCKETS
-
-
-def test_bpe_vocab_sink_work_is_flat(spark, tmp_path):
-    """The word-frequency counter folds its own batch only — flat
-    per-batch work while the vocabulary store grows underneath (the
-    bigram-count envelope, one n-gram order down).  The expensive
-    part of this family (the merge-learning loop) runs in
-    fit_bpe_store, explicitly NOT per batch."""
-    from cga_logs_to_kinesis_spark.streaming.corpus import (
-        bpe_vocab_sink,
-    )
-
-    sink = bpe_vocab_sink(str(tmp_path / "word_freqs"))
-    work = []
-    cursor = _max_stage_id(spark)
-    for k in range(HH_BATCHES):
-        sink(_dup_doc_batch(spark, k), k)
-        delta, cursor = _work_since(spark, cursor)
-        work.append(delta)
-    early = sum(work[1:5]) / 4
-    late = sum(work[8:12]) / 4
-    assert late <= 3.0 * early, (
-        f"per-batch word-freq work grew: early={early:.0f} "
-        f"late={late:.0f} records/batch")
 
 
 def test_semdedup_assign_sink_work_grows_linearly_not_quadratically(

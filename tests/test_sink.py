@@ -126,6 +126,22 @@ def test_empty_and_single(spark, n):
     assert stats["records_sent"].sum() == n
 
 
+def test_delivery_stats_memory_is_flat_over_many_batches():
+    """A long-lived daemon folds every micro-batch into DeliveryStats:
+    it must keep only its integer counters, never a per-batch
+    record, however many batches arrive."""
+    from cga_logs_to_kinesis_spark.streaming.sink import DeliveryStats
+
+    stats = DeliveryStats()
+    row = {"records_sent": 3, "records_dropped": 1, "request_errors": 2}
+    for _ in range(10_000):
+        stats.update([row, row])
+    assert vars(stats) == {"records_sent": 60_000,
+                           "records_dropped": 20_000,
+                           "request_errors": 40_000,
+                           "batches": 10_000}
+
+
 def test_firehose_sink_delivery_and_retry(spark, tmp_path):
     """K5: the Firehose PutRecordBatch sink is the same
     page/retry/drop machinery over a Data-only transport — poisoned

@@ -5,6 +5,7 @@ docs (and README) claim can never drift from the code."""
 
 from __future__ import annotations
 
+import ast
 import importlib.util
 import pathlib
 
@@ -52,3 +53,21 @@ def test_stores_md_is_current():
     committed = pathlib.Path("/root/repo/docs/STORES.md").read_text()
     assert mod.render() == committed, \
         "docs/STORES.md is stale — run: python tools/gen_stores_md.py"
+
+
+def test_exactly_once_plumbing_lives_only_in_shared_helpers():
+    """The batch_id partition write and the crash-once fault hook are
+    declared once in corpus.py.  A sink, reader or compactor that grows
+    its own copy of either fails here."""
+    src = pathlib.Path(corpus.__file__).read_text()
+    shared = {"_write_batch", "_crash_once",
+              "_compact_distinct_store", "_compact_mergeable_store"}
+    rest = src
+    for node in ast.parse(src).body:
+        if isinstance(node, ast.FunctionDef) and node.name in shared:
+            rest = rest.replace(ast.get_source_segment(src, node), "")
+    for needle in ('partitionBy("batch_id")', "already_failed",
+                   "raise FatalDeliveryError"):
+        assert needle not in rest, (
+            f"{needle!r} appears outside the shared helpers "
+            f"{sorted(shared)} in streaming/corpus.py")
